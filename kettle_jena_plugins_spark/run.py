@@ -539,13 +539,21 @@ def main(argv: list[str] | None = None) -> int:
         elif args.input.startswith("envelopes:"):
             # envelopes:DIALECT:PATH — raw wire-format JSON lines as the
             # pipeline input (the .ktr lifecycle over a topic dump)
-            from .sources.envelopes import parse_envelope
+            from .sources.envelopes import PARTIAL_DIALECTS, parse_envelope
 
             parts = args.input.split(":", 2)
             if len(parts) != 3 or not parts[2]:
                 ap.error(
                     "--input envelope form is envelopes:DIALECT:PATH "
                     f"(got {args.input!r})"
+                )
+            if parts[1] in PARTIAL_DIALECTS:
+                # pipeline steps see whole rows: a sparse patch's untouched
+                # cells would read as nulls
+                ap.error(
+                    f"dialect {parts[1]!r} emits sparse row images; pipeline "
+                    "steps need whole rows — ingest or stream it into a "
+                    "table first"
                 )
             df = parse_envelope(spark.read.text(parts[2]), parts[1])
         else:

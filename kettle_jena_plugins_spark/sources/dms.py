@@ -92,7 +92,9 @@ DMS_VALUE_SCHEMA = _value_schema(_ROW_SCHEMA)
 # "bootstrap-insert": an insert for replay purposes
 _OP_IN = {"load": "I", "insert": "I", "update": "U", "delete": "D"}
 
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+# the fraction is optional and 1-6 digits wide: DMS emits microseconds,
+# but millisecond and fraction-less timestamps are well-formed too
+_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]"
 
 
 def parse_dms(
@@ -108,8 +110,9 @@ def parse_dms(
       DDL notifications) become null ops for the dead-letter split.
     - lsn: ``metadata.transaction-id`` verbatim (DMS's per-change
       monotone number; the envelope carries no binlog/WAL position).
-    - ts: microsecond ISO-8601 ``metadata.timestamp`` (UTC ``Z``),
-      parsed exactly — LWW order is preserved at full precision.
+    - ts: ISO-8601 ``metadata.timestamp`` (UTC ``Z``) with 0-6
+      fractional digits, parsed exactly — LWW order is preserved at full
+      precision; an unparseable ts is null (→ the dead-letter split).
     - pass ``table`` to keep only the target table's rows (one task
       streams every table of the source).
     - ``payload_schema`` overrides the projected row shape for
@@ -137,8 +140,8 @@ def parse_dms(
         out = out.filter(
             md["table-name"].isNull() | (md["table-name"] == table)
         )
-    ts = F.to_timestamp(
-        F.regexp_replace(md["timestamp"], r"Z$", ""), _TS_FMT
+    ts = F.try_to_timestamp(
+        F.regexp_replace(md["timestamp"], r"Z$", ""), F.lit(_TS_FMT)
     )
     return out.select(
         op_col.alias("op"),

@@ -41,14 +41,6 @@ class CDCConfig:
     metrics_path: str | None = None  # jsonl, one line per batch
     validation: ValidationSpec = field(default_factory=ValidationSpec)
     evolve: bool = True
-    # pre-reduce the batch to one row per key before the sink. None = auto:
-    # skipped for targets whose merge is itself an LWW reduction
-    # (ParquetLakeTarget.handles_raw_events) — one shuffle instead of two;
-    # forced for Iceberg MERGE (cardinality rule).
-    pre_reduce: bool | None = None
-    # extra pass counting raw late events pre-reduction (only meaningful when
-    # pre_reduce is on; the raw path's sink already counts raw lates)
-    count_late_raw: bool = False
     # streaming-only: drop redelivered WAL entries (same lsn) across
     # micro-batches before foreachBatch, with state bounded by the event-time
     # watermark (streaming/dedup.py). A cost optimization — the sink's
@@ -65,9 +57,9 @@ class CDCConfig:
     # lists the payload columns each event wrote (wal2json column arrays,
     # Mongo $set patches). Routes the sink through its cell-level merge
     # (ParquetLakeTarget.merge_batch partial_set_col) — requires a sink
-    # that handles raw events; incompatible with pre_reduce (a whole-row
-    # pre-reduce would lose per-cell write orders). `salted` composes:
-    # the cell reduce has its own two-phase salted form.
+    # that handles raw events (a whole-row pre-reduce would lose per-cell
+    # write orders). `salted` composes: the cell reduce has its own
+    # two-phase salted form.
     partial_set_col: str | None = None
     # input-side parallelism floor. WAL segments arrive as few large files
     # (binlog shipping), so the scan often yields far fewer partitions than
@@ -97,18 +89,15 @@ def apply_batch(
     `stream_id` scopes the idempotence gate to one checkpoint lineage (see
     ParquetLakeTarget.merge_batch)."""
     cfg = cfg or CDCConfig()
-    if cfg.partial_set_col is not None:
-        if cfg.pre_reduce:
-            raise ValueError(
-                "partial_set_col requires the raw sink-side cell merge: "
-                "a pre_reduce whole-row reduction would lose per-cell "
-                "write orders"
-            )
-        if not getattr(target, "handles_raw_events", False):
-            raise ValueError(
-                "partial_set_col needs a sink with a cell-level merge "
-                "(ParquetLakeTarget); this target pre-reduces whole rows"
-            )
+    # a sink whose merge is itself an LWW reduction (parquet lake) takes the
+    # raw events — one shuffle instead of two; any other sink (Iceberg
+    # MERGE forbids multiple source rows per key) gets them pre-reduced
+    raw_sink = getattr(target, "handles_raw_events", False)
+    if cfg.partial_set_col is not None and not raw_sink:
+        raise ValueError(
+            "partial_set_col needs a sink with a cell-level merge "
+            "(ParquetLakeTarget); this target pre-reduces whole rows"
+        )
 
     # 0. input-parallelism floor (see CDCConfig.input_partitions)
     if cfg.input_partitions is not None:
@@ -157,6 +146,7 @@ def apply_batch(
         return df
 
     # 3. schema evolution: ALTER before the merge plan is analyzed
+    tgt_schema = target.schema()
     if cfg.evolve:
         batch_schema = ok.schema
         if cfg.partial_set_col is not None:
@@ -166,14 +156,14 @@ def apply_batch(
                 [f for f in batch_schema.fields
                  if f.name != cfg.partial_set_col]
             )
-        new_schema = evolved_schema(target.schema(), batch_schema)
+        new_schema = evolved_schema(tgt_schema, batch_schema)
         if new_schema is not None:
             target.evolve_schema(new_schema)
+            tgt_schema = new_schema
     # align batch to the (possibly evolved) target payload set: missing
     # payload columns → null (late producers), key/ts casts to target types
-    tgt_fields = {f.name: f for f in target.schema().fields}
     cols = [F.col(c) for c in ENVELOPE_COLS]
-    for f in target.schema().fields:
+    for f in tgt_schema.fields:
         if f.name in ok.columns:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
@@ -196,69 +186,29 @@ def apply_batch(
                 k: int(v or 0) for k, v in ok.agg(*aggs).first().asDict().items()
             }
 
-    # 3.5 late-event lineage: raw events at-or-below their bucket's committed
-    # LSN high-watermark (duplicates/out-of-order replays), counted BEFORE
-    # reduction so redelivered rows that lose LWW are still accounted.
-    n_late_raw = 0
-    if cfg.count_late_raw and hasattr(target, "watermarks"):
-        wm = target.watermarks()
-        if wm:
-            wm_map = F.create_map(
-                *[F.lit(x) for b, l in wm.items() for x in (int(b), l)]
-            )
-            bucket = F.pmod(F.xxhash64("conv_id"), F.lit(target.n_buckets)).cast(
-                "int"
-            )
-            n_late_raw = ok.filter(
-                F.col("lsn") <= F.coalesce(wm_map[bucket], F.lit(-(2**62)))
-            ).count()
-
-    # 4. LWW reduce to one final event per key (pre-MERGE cardinality
-    #    guarantee — Iceberg MERGE forbids multi-row source matches). Skipped
-    #    when the sink's merge is itself an LWW reduction (parquet lake):
-    #    the union-merge then runs as ONE shuffle over raw events.
-    pre_reduce = (
-        cfg.pre_reduce
-        if cfg.pre_reduce is not None
-        else not getattr(target, "handles_raw_events", False)
-    )
-    if pre_reduce:
+    # 4. idempotent MERGE commit. The raw sink reduces (salted for hot-key
+    #    skew) and normalizes after its own reduce; otherwise reduce here to
+    #    one final event per key (Iceberg MERGE cardinality) and normalize
+    #    the winners only.
+    if raw_sink:
+        res = target.merge_batch(
+            ok, batch_id, stream_id=stream_id,
+            salted=cfg.salted, salt_buckets=cfg.salt_buckets,
+            transform_reduced=(
+                _normalize if (cfg.normalize or cfg.redact) else None
+            ),
+            partial_set_col=cfg.partial_set_col,
+        )
+    else:
         reduced = (
             lww_reduce_salted(ok, salt_buckets=cfg.salt_buckets)
             if cfg.salted
             else lww_reduce(ok)
         )
-        reduced = _normalize(reduced)  # winners only
-    elif not getattr(target, "handles_raw_events", False):
-        # explicit pre_reduce=False with a sink that has no transform_reduced
-        # hook: normalize the raw stream directly so the step is never
-        # silently skipped (slower — Python stage before the reduction — but
-        # correct; the auto path above never lands here)
-        reduced = _normalize(ok)
-    else:
-        reduced = ok
-
-    # 5. idempotent MERGE commit (raw path: the sink's own LWW is salted
-    #    for hot-key skew instead of a pre-reduce; normalization runs inside
-    #    the sink, after its reduce)
-    sink_kwargs = {}
-    if not pre_reduce and getattr(target, "handles_raw_events", False):
-        sink_kwargs = {
-            "salted": cfg.salted,
-            "salt_buckets": cfg.salt_buckets,
-            "transform_reduced": (
-                _normalize if (cfg.normalize or cfg.redact) else None
-            ),
-        }
-        if cfg.partial_set_col is not None:
-            sink_kwargs["partial_set_col"] = cfg.partial_set_col
-    res = target.merge_batch(reduced, batch_id, stream_id=stream_id, **sink_kwargs)
+        res = target.merge_batch(_normalize(reduced), batch_id, stream_id=stream_id)
     res.extra["dead_letter_rows"] = n_dead
-    res.extra["late_keys"] = res.late_events
     if warn_nulls:
         res.extra["warn_nulls"] = warn_nulls
-    if res.applied:
-        res.late_events = max(int(n_late_raw), res.late_events)
 
     if cfg.metrics_path:
         _append_metrics(

@@ -23,15 +23,17 @@ Layout (table root):
                                                   watermarks, batch metrics
     _snapshots/CURRENT                            atomic pointer (os.replace)
 
-Write modes:
-    cow — each merge unions the affected buckets with the batch, re-reduces
-          LWW, rewrites those buckets (read-optimal, write-amplified).
-    mor — each merge appends a batch-local LWW-reduced DELTA layer to the
-          affected buckets (write cost O(batch), independent of table size);
-          reads resolve LWW across layers; buckets exceeding
-          compact_threshold layers are compacted inline (amortized O(1)
-          rewrites per layer). This is the high-throughput CDC path —
-          the analogue of Iceberg's merge-on-read MERGE mode.
+Write modes — one merge path; the mode only sets the compaction threshold.
+Every merge appends a batch-local LWW-reduced DELTA layer to the affected
+buckets (write cost O(batch), independent of table size), compacts each
+bucket whose layer stack then exceeds the threshold, and commits once;
+reads resolve LWW across layers.
+    cow — threshold 1: every touched bucket that had a prior layer is
+          compacted back to one base layer in the same commit
+          (read-optimal, write-amplified).
+    mor — threshold compact_threshold: layers accumulate and compact
+          amortized (O(1) rewrites per layer). This is the high-throughput
+          CDC path — the analogue of Iceberg's merge-on-read MERGE mode.
 
 Correctness under both modes rests on the same invariant: the visible row
 set equals LWW over (ts, lsn, op) of everything ever written, with deletes
@@ -45,20 +47,37 @@ amplification at high batch rates.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import LWW_ORDER, MERGE_KEYS, TRANSCRIPTS_SCHEMA
-from ..operators.lww import lww_reduce, lww_reduce_salted
+from ..operators.lww import lww_reduce, lww_reduce_partial, lww_reduce_salted
 
 INTERNAL_COLS = ("_lsn", "_deleted")
+
+
+def _footer_rows_max_lsn(path: str) -> tuple[int, int]:
+    """(row count, max _lsn) of one written parquet file, from its footer."""
+    md = pq.ParquetFile(path).metadata
+    col_idx = next(
+        i for i in range(md.num_columns) if md.schema.column(i).name == "_lsn"
+    )
+    mx = -1
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(col_idx).statistics
+        if st is not None and st.max is not None:
+            mx = max(mx, int(st.max))
+    return md.num_rows, mx
 
 
 @dataclass
@@ -92,7 +111,8 @@ class ParquetLakeTarget:
         """mode=None → adopt the mode recorded in the table's manifest at
         create time (falls back to "cow" for a not-yet-created table) —
         re-opening an existing table should never silently flip its write
-        mode because the caller forgot to repeat the flag."""
+        mode because the caller forgot to repeat the flag.
+        compact_threshold applies to mor only; cow compacts every commit."""
         assert mode in ("cow", "mor", None)
         self.spark = spark
         self.root = root.rstrip("/")
@@ -254,29 +274,29 @@ class ParquetLakeTarget:
         committed snapshot."""
         m = self.manifest(version)
         cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+        entries = [
+            e for b, e in m["buckets"].items()
+            if buckets is None or int(b) in buckets
+        ]
+        out = self._read_layers(entries, cur_schema)
+        if resolve is None:
+            resolve = any(len(e["layers"]) > 1 for e in entries)
+        return self._resolve(out) if resolve else out
+
+    def _read_layers(self, entries: list[dict], cur_schema: T.StructType) -> DataFrame:
+        """Every layer of the given bucket entries, unresolved, aligned to
+        cur_schema — one parquet scan per schema version."""
         groups: dict[int, list[str]] = {}
-        multi_layer = False
-        for b, entry in m["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            layers = entry["layers"]
-            multi_layer = multi_layer or len(layers) > 1
-            for layer in layers:
+        for entry in entries:
+            for layer in entry["layers"]:
                 groups.setdefault(layer["schema_id"], []).extend(layer["files"])
         if not groups:
-            return self.spark.createDataFrame(
-                [], self._internal_schema(cur_schema)
-            )
-        parts = []
-        for sid, files in groups.items():
-            df = self.spark.read.parquet(*files)
-            parts.append(self._align(df, cur_schema))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if resolve is None:
-            resolve = multi_layer
-        return self._resolve(out) if resolve else out
+            return self.spark.createDataFrame([], self._internal_schema(cur_schema))
+        parts = [
+            self._align(self.spark.read.parquet(*files), cur_schema)
+            for files in groups.values()
+        ]
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read(self, version: int | None = None) -> DataFrame:
         """The logical table: live rows only, internal columns hidden.
@@ -517,6 +537,17 @@ class ParquetLakeTarget:
         gate is scoped by stream_id — a new lineage re-applies its batches and
         the (ts, lsn) LWW guard makes that replay convergent, not corrupting.
 
+        One path for both modes: the batch is LWW-reduced to one row per
+        key and written as ONE delta file group, appended as a layer to the
+        touched buckets; every bucket whose layer stack then exceeds the
+        mode's threshold (1 for cow, compact_threshold for mor) is
+        compacted, and the whole result lands in ONE snapshot commit.
+        Batch metrics (events, delete events, late events) ride the delta
+        write via DataFrame.observe; per-bucket LSN watermarks and
+        touched-key counts come from the delta files' parquet footers. A
+        whole-row batch that compacts nothing is therefore one Spark action
+        with no target read.
+
         ``partial_set_col``: the batch's events carry PARTIAL row images —
         the named array column lists the payload columns each event wrote
         (operators/lww.py lww_reduce_partial's contract). The merge then
@@ -524,10 +555,12 @@ class ParquetLakeTarget:
         the reduce as full-image writes at their committed (ts, lsn), so a
         sparse update inherits every untouched cell. Consequences, by design:
         - there is no no-read fast path — partial images NEED the old row,
-          so the affected buckets are always read. COW tables rewrite them;
-          MOR tables append a delta layer holding ONLY the touched keys'
-          resolved rows (untouched keys stay in their existing layers, and
-          the layer stack compacts past compact_threshold as usual);
+          so the affected buckets are read, semi-joined to the batch's keys;
+          the delta layer holds ONLY the touched keys' resolved rows. The
+          read-side whole-row resolution (_resolve) layers them correctly
+          because a resolved row's (ts, _lsn) is >= every older version's
+          (a batch of purely-stale events resolves to a byte-identical copy
+          of the committed row, so even that tie is harmless);
         - cell resolution is exact within a batch; ACROSS batches a late
           cell write resolves against the row's committed version at ROW
           granularity (the lake stores row versions, not per-cell versions —
@@ -542,313 +575,110 @@ class ParquetLakeTarget:
             return MergeResult(batch_id=batch_id, applied=False,
                                snapshot_version=m["version"])
 
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
-        payload_cols = [f.name for f in cur_schema.fields if f.name not in MERGE_KEYS]
-
+        cur_sid = m["current_schema_id"]
+        cur_schema = T.StructType.fromJson(m["schemas"][str(cur_sid)])
+        cell_cols = [
+            f.name for f in cur_schema.fields if f.name not in (*MERGE_KEYS, "ts")
+        ]
         wm = {k: int(v) for k, v in m.get("watermarks", {}).items()}
-        if self.mode == "mor" and partial_set_col is None:
-            # single-Spark-job fast path: metrics ride the write via observe,
-            # per-bucket watermarks come from parquet footers
-            return self._merge_mor(
-                reduced, batch_id, stream_id, salted, salt_buckets,
-                m, cur_schema, payload_cols, wm, transform_reduced,
-            )
-        batch = reduced.withColumn("_b", self._bucket_col()).cache()
-        # late events = lsn at-or-below the bucket's committed high-watermark
-        # (duplicate/out-of-order replays); computed in the same single agg
-        # via a literal map — no per-bucket jobs.
-        if wm:
-            wm_map = F.create_map(
-                *[F.lit(x) for b, l in wm.items() for x in (int(b), l)]
-            )
-            late_col = F.sum(
-                F.when(
-                    F.col("lsn")
-                    <= F.coalesce(wm_map[F.col("_b")], F.lit(-(2**62))),
-                    1,
-                ).otherwise(0)
-            ).alias("n_late")
-        else:
-            late_col = F.sum(F.lit(0)).alias("n_late")
-        stats = batch.groupBy("_b").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-            F.count_distinct(*[F.col(k) for k in MERGE_KEYS]).alias("n_keys"),
-            late_col,
-        ).collect()
-        if not stats:
-            batch.unpersist()
-            m["version"] += 1
-            m["batch_id"] = batch_id
-            m["stream_id"] = stream_id
-            self._commit(m)
-            return MergeResult(batch_id=batch_id, applied=True,
-                               snapshot_version=m["version"])
-
-        affected = sorted(int(r["_b"]) for r in stats)
-        events_in = int(sum(r["n"] for r in stats))
-
-        cell_cols = [c for c in payload_cols if c != "ts"]
-
-        def reduce_events(ev: DataFrame) -> DataFrame:
-            if partial_set_col is not None:
-                from ..operators.lww import lww_reduce_partial
-
-                return lww_reduce_partial(
-                    ev, keys=MERGE_KEYS, order=LWW_ORDER,
-                    set_col=partial_set_col, payload=cell_cols,
-                    salt_buckets=salt_buckets if salted else None,
-                )
-            return (
-                lww_reduce_salted(
-                    ev, keys=MERGE_KEYS, order=LWW_ORDER, salt_buckets=salt_buckets
-                )
-                if salted
-                else lww_reduce(ev, keys=MERGE_KEYS, order=LWW_ORDER)
-            )
-
-        ev_cols = ["op", "lsn", "ts", *MERGE_KEYS, *cell_cols]
-        if partial_set_col is not None:
-            ev_cols.append(partial_set_col)
-        batch_events = batch.drop("_b").select(*ev_cols)
-
-        n_compacted = 0
-        # partial + MOR table: append a delta layer of ONLY the touched
-        # keys' resolved rows instead of rewriting whole buckets — the
-        # read-side whole-row resolution (_resolve) layers them correctly
-        # because a resolved row's (ts, _lsn) is >= every older version's
-        # (a batch of purely-stale events resolves to a byte-identical
-        # copy of the committed row, so even that tie is harmless)
-        partial_layering = partial_set_col is not None and self.mode == "mor"
-        # union current bucket contents (tombstones incl.) with the batch
-        target = self.read_internal(buckets=affected, resolve=False)
-        as_events = target.select(
-            F.when(F.col("_deleted"), F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            F.col("_lsn").alias("lsn"),
-            F.col("ts"),
-            *MERGE_KEYS,
-            *[F.col(c) for c in cell_cols],
-        )
-        if partial_layering:
-            # the delta layer only needs the batch's keys; untouched keys
-            # stay in their existing layers untouched
-            as_events = as_events.join(
-                batch_events.select(*MERGE_KEYS).distinct(),
-                list(MERGE_KEYS),
-                "left_semi",
-            )
-        if partial_set_col is not None:
-            # committed rows are RESOLVED states: they enter the cell
-            # reduce as full-image writes at their committed (ts, lsn)
-            # (tombstones' set list is never consulted for op='D')
-            as_events = as_events.withColumn(
-                partial_set_col, F.array(*[F.lit(c) for c in cell_cols])
-            )
-        merged = reduce_events(as_events.unionByName(batch_events))
-        if transform_reduced is not None:
-            # post-reduce payload transform (e.g. normalization): runs on one
-            # row per key instead of per event; must be idempotent — existing
-            # table rows pass through it again on COW rewrites
-            merged = transform_reduced(merged)
-
-        data = merged.select(
-            *[F.col(f.name) for f in cur_schema.fields],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == "D").alias("_deleted"),
-        )
-        files_by_bucket = self._write_file_group(data)
-
-        n_deleted = int(sum(r["n_del"] for r in stats))
-        late = int(sum(r["n_late"] for r in stats))
-        n_keys = int(sum(r["n_keys"] for r in stats))
-        for r in stats:
-            b = str(int(r["_b"]))
-            wm[b] = max(wm.get(b, -1), int(r["max_lsn"]))
-        batch.unpersist()
-
-        new_buckets = {b: dict(e) for b, e in m["buckets"].items()}
-        for b, files in files_by_bucket.items():
-            layer = {"files": files, "schema_id": m["current_schema_id"]}
-            if partial_layering and b in new_buckets:
-                new_buckets[b]["layers"] = new_buckets[b]["layers"] + [layer]
-            else:
-                new_buckets[b] = {"layers": [layer]}
-        if partial_layering:
-            over = [
-                int(b)
-                for b, e in new_buckets.items()
-                if len(e["layers"]) > self.compact_threshold
-            ]
-            if over:
-                new_buckets.update(
-                    self._compact_layers(new_buckets, over, cur_schema)
-                )
-                n_compacted = len(over)
-
-        res = MergeResult(
-            batch_id=batch_id,
-            applied=True,
-            events_in=events_in,
-            # with raw (unreduced) input these are touched-keys / delete-event
-            # counts; with pre-reduced input they are exact per-key counts
-            keys_upserted=n_keys - n_deleted if events_in == n_keys else n_keys,
-            keys_deleted=n_deleted,
-            late_events=late,
-            buckets_rewritten=len(affected),
-            buckets_compacted=n_compacted,
-        )
-        m["version"] += 1
-        m["batch_id"] = batch_id
-        m["stream_id"] = stream_id
-        m["buckets"] = new_buckets
-        m["watermarks"] = wm
-        m["metrics"] = {
-            "events_in": res.events_in,
-            "keys_upserted": res.keys_upserted,
-            "keys_deleted": res.keys_deleted,
-            "late_events": res.late_events,
-            "buckets_rewritten": res.buckets_rewritten,
-            "buckets_compacted": res.buckets_compacted,
-        }
-        res.snapshot_version = self._commit(m)
-        return res
-
-    def _merge_mor(
-        self,
-        reduced: DataFrame,
-        batch_id: int,
-        stream_id: str,
-        salted: bool,
-        salt_buckets: int,
-        m: dict,
-        cur_schema: T.StructType,
-        payload_cols: list[str],
-        wm: dict[str, int],
-        transform_reduced=None,
-    ) -> MergeResult:
-        """Merge-on-read fast path: ONE Spark job per batch.
-
-        - the delta write is the only action; batch metrics (event count,
-          delete events, late events) ride it via DataFrame.observe
-        - per-bucket LSN watermarks and touched-key counts come from the
-          written delta files' parquet footers (driver-side, no scan)
-        - no target read at all: reads resolve LWW across delta layers;
-          buckets past compact_threshold layers are compacted inline
-        """
-        from pyspark.sql import Observation
-
-        import pyarrow.parquet as pq
 
         batch = reduced.withColumn("_b", self._bucket_col())
+        # late events = lsn at-or-below the bucket's committed high-watermark
+        # (duplicate/out-of-order replays)
         if wm:
             wm_map = F.create_map(
                 *[F.lit(x) for b, l in wm.items() for x in (int(b), l)]
             )
-            late_expr = F.sum(
-                F.when(
-                    F.col("lsn")
-                    <= F.coalesce(wm_map[F.col("_b")], F.lit(-(2**62))),
-                    1,
-                ).otherwise(0)
-            ).alias("n_late")
+            late = F.col("lsn") <= F.coalesce(wm_map[F.col("_b")], F.lit(-(2**62)))
         else:
-            late_expr = F.max(F.lit(0)).alias("n_late")
+            late = F.lit(False)
         obs = Observation(f"cdc-batch-{batch_id}")
         observed = batch.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-            late_expr,
+            F.sum(F.when(late, 1).otherwise(0)).alias("n_late"),
         )
-        ev_cols = ["op", "lsn", "ts", *MERGE_KEYS] + [
-            c for c in payload_cols if c != "ts"
-        ]
-        batch_events = observed.drop("_b").select(*ev_cols)
-        merged = (
-            lww_reduce_salted(
-                batch_events, keys=MERGE_KEYS, order=LWW_ORDER,
-                salt_buckets=salt_buckets,
+        ev_cols = ["op", "lsn", "ts", *MERGE_KEYS, *cell_cols]
+        if partial_set_col is None:
+            events = observed.select(*ev_cols)
+            merged = (
+                lww_reduce_salted(
+                    events, keys=MERGE_KEYS, order=LWW_ORDER,
+                    salt_buckets=salt_buckets,
+                )
+                if salted
+                else lww_reduce(events, keys=MERGE_KEYS, order=LWW_ORDER)
             )
-            if salted
-            else lww_reduce(batch_events, keys=MERGE_KEYS, order=LWW_ORDER)
-        )
+        else:
+            batch.cache()  # read again for its buckets and keys
+            affected = [r["_b"] for r in batch.select("_b").distinct().collect()]
+            committed = self.read_internal(buckets=affected, resolve=False).join(
+                batch.select(*MERGE_KEYS).distinct(), list(MERGE_KEYS), "left_semi"
+            )
+            # committed rows are RESOLVED states: they enter the cell reduce
+            # as full-image writes at their committed (ts, lsn) (tombstones'
+            # set list is never consulted for op='D')
+            as_events = committed.select(
+                F.when(F.col("_deleted"), F.lit("D")).otherwise(F.lit("U")).alias("op"),
+                F.col("_lsn").alias("lsn"),
+                "ts", *MERGE_KEYS, *cell_cols,
+                F.array(*[F.lit(c) for c in cell_cols]).alias(partial_set_col),
+            )
+            events = observed.select(*ev_cols, partial_set_col)
+            # batch on the LEFT: a union runs in its left side's session,
+            # and a foreachBatch micro-batch (with its observation) lives in
+            # the stream's cloned session, not self.spark
+            merged = lww_reduce_partial(
+                events.unionByName(as_events), keys=MERGE_KEYS, order=LWW_ORDER,
+                set_col=partial_set_col, payload=cell_cols,
+                salt_buckets=salt_buckets if salted else None,
+            )
         if transform_reduced is not None:
             # normalize AFTER the reduce: the Python/Arrow stage then sees one
             # row per key, not per event (~10x less at update-heavy batches).
             # Ordering is safe — LWW winner selection uses (ts, lsn, op), not
             # the payload, and the transform is idempotent.
             merged = transform_reduced(merged)
-        data = merged.select(
-            *[F.col(f.name) for f in cur_schema.fields],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == "D").alias("_deleted"),
+        files_by_bucket = self._write_file_group(
+            merged.select(
+                *[F.col(f.name) for f in cur_schema.fields],
+                F.col("lsn").alias("_lsn"),
+                (F.col("op") == "D").alias("_deleted"),
+            )
         )
-        files_by_bucket = self._write_file_group(data)  # the one action
+        batch.unpersist()  # a no-op unless the partial branch cached it
         stats = obs.get
-        events_in = int(stats["n"] or 0)
-
-        if events_in == 0:
-            m["version"] += 1
-            m["batch_id"] = batch_id
-            m["stream_id"] = stream_id
-            self._commit(m)
-            return MergeResult(batch_id=batch_id, applied=True,
-                               snapshot_version=m["version"])
 
         # per-bucket watermark (max _lsn) + touched keys from parquet footers
         # (footers read concurrently — this loop is driver-side serial cost
         # that otherwise caps scaling efficiency at high parallelism)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _footer(fpath: str) -> tuple[int, int]:
-            md = pq.ParquetFile(fpath).metadata
-            col_idx = next(
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == "_lsn"
-            )
-            mx = -1
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                if st is not None and st.max is not None:
-                    mx = max(mx, int(st.max))
-            return md.num_rows, mx
-
-        all_files = [
-            (b, f) for b, files in files_by_bucket.items() for f in files
-        ]
+        written = [(b, f) for b, fs in files_by_bucket.items() for f in fs]
         with ThreadPoolExecutor(max_workers=16) as pool:
-            footers = list(pool.map(lambda bf: _footer(bf[1]), all_files))
+            footers = list(pool.map(_footer_rows_max_lsn, [f for _, f in written]))
         n_keys = sum(nr for nr, _ in footers)
-        for (b, _), (_, mx) in zip(all_files, footers):
+        for (b, _), (_, mx) in zip(written, footers):
             wm[b] = max(wm.get(b, -1), mx)
 
-        new_buckets = {b: dict(e) for b, e in m["buckets"].items()}
-        for b, files in files_by_bucket.items():
-            layer = {"files": files, "schema_id": m["current_schema_id"]}
-            if b not in new_buckets:
-                new_buckets[b] = {"layers": [layer]}
-            else:
-                new_buckets[b]["layers"] = new_buckets[b]["layers"] + [layer]
-
-        over = [
-            int(b)
-            for b, e in new_buckets.items()
-            if len(e["layers"]) > self.compact_threshold
-        ]
+        buckets = dict(m["buckets"])
+        for b, fs in files_by_bucket.items():
+            prior = buckets[b]["layers"] if b in buckets else []
+            buckets[b] = {"layers": [*prior, {"files": fs, "schema_id": cur_sid}]}
+        # cow is mor with threshold 1: every touched bucket that had a prior
+        # layer is compacted back to one base layer in this same commit
+        threshold = 1 if self.mode == "cow" else self.compact_threshold
+        over = [b for b, e in buckets.items() if len(e["layers"]) > threshold]
         if over:
-            new_buckets.update(
-                self._compact_layers(new_buckets, over, cur_schema)
-            )
+            buckets.update(self._compact_layers(buckets, over, cur_schema, cur_sid))
 
+        events_in = int(stats["n"] or 0)
         n_del = int(stats["n_del"] or 0)
         res = MergeResult(
             batch_id=batch_id,
             applied=True,
             events_in=events_in,
+            # with raw (unreduced) input these are touched-keys / delete-event
+            # counts; with pre-reduced input they are exact per-key counts
             keys_upserted=n_keys - n_del if events_in == n_keys else n_keys,
             keys_deleted=n_del,
             late_events=int(stats["n_late"] or 0),
@@ -858,7 +688,7 @@ class ParquetLakeTarget:
         m["version"] += 1
         m["batch_id"] = batch_id
         m["stream_id"] = stream_id
-        m["buckets"] = new_buckets
+        m["buckets"] = buckets
         m["watermarks"] = wm
         m["metrics"] = {
             "events_in": res.events_in,
@@ -874,27 +704,17 @@ class ParquetLakeTarget:
     def _compact_layers(
         self,
         buckets: dict,
-        which: list[int],
+        which: list[str],
         cur_schema: T.StructType,
+        cur_sid: int,
     ) -> dict:
         """Rewrite the given buckets' layer stacks into single LWW-resolved
         base layers (tombstones retained for late-event correctness)."""
-        groups: dict[int, list[str]] = {}
-        for b in which:
-            for layer in buckets[str(b)]["layers"]:
-                groups.setdefault(layer["schema_id"], []).extend(layer["files"])
-        parts = []
-        for sid, files in groups.items():
-            parts.append(self._align(self.spark.read.parquet(*files), cur_schema))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        resolved = self._resolve(df)
-        files_by_bucket = self._write_file_group(resolved)
-        cur_sid = int(self.manifest()["current_schema_id"])
+        layers = self._read_layers([buckets[b] for b in which], cur_schema)
+        files_by_bucket = self._write_file_group(self._resolve(layers))
         return {
-            sb: {"layers": [{"files": files_by_bucket[sb], "schema_id": cur_sid}]}
-            for sb in files_by_bucket
+            b: {"layers": [{"files": fs, "schema_id": cur_sid}]}
+            for b, fs in files_by_bucket.items()
         }
 
     def compact(self, buckets: list[int] | None = None) -> int:
@@ -903,13 +723,15 @@ class ParquetLakeTarget:
         m = self.manifest()
         cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
         which = [
-            int(b)
+            b
             for b, e in m["buckets"].items()
             if (buckets is None or int(b) in buckets) and len(e["layers"]) > 1
         ]
         if not which:
             return 0
-        new_entries = self._compact_layers(m["buckets"], which, cur_schema)
+        new_entries = self._compact_layers(
+            m["buckets"], which, cur_schema, m["current_schema_id"]
+        )
         m["buckets"].update(new_entries)
         m["version"] += 1
         self._commit(m)

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 import pytest
 
@@ -25,3 +27,27 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` counts the Spark jobs the block
+    runs: they are tagged with a fresh job group, and on exit
+    ``jobs["n"]`` holds the group's job count from the status tracker."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        jobs: dict = {}
+        sc.setJobGroup(group, "counted by the spark_jobs fixture")
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # job-start events reach the status store via the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs["n"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

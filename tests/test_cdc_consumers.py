@@ -818,6 +818,35 @@ def test_dms_control_records_load_op_and_table_filter(spark):
     assert out[0]["ts"] == datetime.datetime(2026, 1, 1, 0, 0, 1, 2)
 
 
+def test_dms_timestamp_fraction_width(spark):
+    """DMS timestamps with a millisecond or no fraction are well-formed and
+    parse exactly; a malformed one is a null ts for the dead-letter split."""
+    from kettle_jena_plugins_spark.sources.dms import parse_dms
+
+    def env(ts, lsn):
+        return (
+            '{"data":{"conv_id":"c1","turn_idx":1,"role":"u","text":"x",'
+            '"tool":null},"metadata":{"timestamp":"%s","record-type":"data",'
+            '"operation":"insert","table-name":"transcripts",'
+            '"transaction-id":%d}}' % (ts, lsn)
+        )
+
+    raw = spark.createDataFrame(
+        [
+            (env("2026-01-01T00:00:01.175Z", 1),),
+            (env("2026-01-01T00:00:02Z", 2),),
+            (env("2026-01-01 bad", 3),),
+        ],
+        "value string",
+    )
+    out = parse_dms(raw).orderBy("lsn").collect()
+    assert [r["ts"] for r in out] == [
+        datetime.datetime(2026, 1, 1, 0, 0, 1, 175000),
+        datetime.datetime(2026, 1, 1, 0, 0, 2),
+        None,
+    ]
+
+
 def test_mongo_oplog_patch_semantics_and_filters(spark):
     """$set/$unset patches parse with the set-columns mask; a
     replacement-document update (no operators) is a full image; n/c ops

@@ -193,6 +193,76 @@ def test_mor_compaction_preserves_state(spark, tmp_path):
     t.drop()
 
 
+def test_mor_whole_row_merge_below_threshold_is_one_job(spark, tmp_path, spark_jobs):
+    """The whole-row merge's only Spark action is the delta write: batch
+    counts ride it via observe and watermarks come from parquet footers —
+    no stats job, no target read, no cache."""
+    t = ParquetLakeTarget(
+        spark, str(tmp_path / "mor"), n_buckets=2, mode="mor", compact_threshold=3
+    )
+    t.create()
+    apply_batch(t, make_events(spark, [ev("I", 1, 1, "a", 0, text="v0")]), 0)
+    batch = make_events(spark, [
+        ev("U", 2, 2, "a", 0, text="v1"),
+        ev("I", 3, 3, "b", 1, text="w"),
+        ev("D", 4, 4, "c", 2),
+    ])
+    # adaptive execution submits each shuffle stage as its own job; with it
+    # off, one job is one action
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with spark_jobs() as jobs:
+            res = t.merge_batch(batch, 1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs["n"] == 1
+    assert res.buckets_compacted == 0 and res.events_in == 3
+    t.drop()
+
+
+def test_cow_and_mor_report_equal_batch_counts(spark, tmp_path):
+    """One merge path: the mode only sets the compaction threshold, so both
+    modes report the same counts for the same batch sequence — including a
+    loser with a higher lsn than its key's winner (the watermark is the
+    max WRITTEN lsn) and an empty batch."""
+    batches = [
+        [
+            ev("I", 1, 1, "a", 0, text="x"),
+            ev("U", 9, 0, "a", 0, text="older-ts"),  # loses on ts
+            ev("I", 2, 2, "a", 1),
+            ev("U", 3, 3, "a", 0, text="y"),
+        ],
+        [
+            ev("D", 4, 4, "a", 1),
+            ev("U", 2, 2, "a", 0, text="late"),
+            ev("I", 5, 5, "b", 0),
+        ],
+        [],
+        [ev("U", 6, 6, "b", 0, text="z"), ev("U", 6, 6, "b", 0, text="z")],
+    ]
+    counts = {}
+    for mode in ("cow", "mor"):
+        t = ParquetLakeTarget(
+            spark, str(tmp_path / mode), n_buckets=1, mode=mode,
+            compact_threshold=3,
+        )
+        t.create()
+        counts[mode] = []
+        for i, rows in enumerate(batches):
+            r = apply_batch(
+                t, make_events(spark, rows), i, CDCConfig(normalize=False)
+            )
+            counts[mode].append(
+                (r.events_in, r.keys_upserted, r.keys_deleted, r.late_events)
+            )
+        t.drop()
+    assert counts["cow"] == counts["mor"]
+    # only lsn 2 is at-or-below the bucket watermark 3 (a0's winner), not 9
+    assert counts["mor"][1][3] == 1
+    assert counts["mor"][2] == (0, 0, 0, 0)
+
+
 def test_multibatch_equals_oneshot_lww(spark, target):
     """Convergence golden test: incremental apply over batches == one-shot
     lww_state over the concatenated log (SURVEY.md §7 minimum slice)."""
@@ -216,8 +286,9 @@ def test_multibatch_equals_oneshot_lww(spark, target):
 
 def test_normalize_post_reduce_applies_to_winners(spark, target):
     """normalize=True: final table text is normalized (collapsed whitespace,
-    trimmed) on both the pre-reduce (COW union) and raw-event (MOR) sink
-    paths, and LWW winner selection is unaffected by messy payloads."""
+    trimmed) in both modes (COW compacts the delta layer in the same
+    commit, MOR keeps it), and LWW winner selection is unaffected by messy
+    payloads."""
     rows = [
         ev("I", 1, 0, "c1", 0, text="  hello \t world "),
         ev("U", 2, 10, "c1", 0, text=" final   text "),  # winner

@@ -1,9 +1,9 @@
 """Partial-image ingest end-to-end: sparse change events (set-columns
 mask) through apply_batch → ParquetLakeTarget.merge_batch's cell-level
-merge. Partial images need the old row, so every mode takes the
-read-union-rewrite path; cell resolution is exact within a batch and
-ROW-granular across batches (the lake stores row versions, not cell
-versions) — both contracts are pinned here.
+merge. Partial images need the old row, so every mode reads the touched
+keys' committed rows into the cell reduce; cell resolution is exact
+within a batch and ROW-granular across batches (the lake stores row
+versions, not cell versions) — both contracts are pinned here.
 """
 
 from __future__ import annotations
@@ -151,13 +151,14 @@ def test_set_cols_mask_never_evolves_target_schema(spark, target):
     assert "set_cols" not in [f.name for f in target.schema().fields]
 
 
-def test_partial_rejects_pre_reduce_composes_with_salted(spark, target):
+def test_partial_rejects_whole_row_sink_composes_with_salted(spark, target):
+    class WholeRowSink:  # no handles_raw_events: no cell-level merge
+        pass
+
     df = make(spark, [ev("I", 1, 1, "a", 0, role="u",
                          set_cols=("role",))])
-    with pytest.raises(ValueError, match="pre_reduce"):
-        apply_batch(target, df, 0,
-                    cfg=CDCConfig(partial_set_col="set_cols",
-                                  pre_reduce=True))
+    with pytest.raises(ValueError, match="cell-level merge"):
+        apply_batch(WholeRowSink(), df, 0, cfg=CFG)
     # salted composes: the cell reduce pre-reduces per (keys, salt) with
     # the same associative struct maxes — hot-key path, same semantics
     salted_cfg = CDCConfig(normalize=False, partial_set_col="set_cols",

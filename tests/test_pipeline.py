@@ -146,6 +146,27 @@ def test_pipeline_cli_envelope_input(spark, tmp_path, capsys):
     ch.unpersist()
 
 
+def test_pipeline_cli_refuses_sparse_envelope_input(spark, tmp_path, capsys):
+    """Mongo oplog patches are partial row images: the pipeline's whole-row
+    steps would read their untouched cells as nulls, so the envelope input
+    refuses the dialect like stream/ingest refuse a whole-row merge."""
+    from kettle_jena_plugins_spark.run import main
+    from kettle_jena_plugins_spark.sources.mongo import to_mongo_oplog
+
+    ch = events(spark).limit(10).withColumn(
+        "set_cols", F.array(F.lit("role"), F.lit("text"), F.lit("tool"))
+    )
+    to_mongo_oplog(ch).coalesce(1).write.text(str(tmp_path / "env"))
+    spec_path = tmp_path / "spec.json"
+    spec_path.write_text(
+        json.dumps({"steps": [{"type": "filter", "condition": "op <> 'D'"}]})
+    )
+    with pytest.raises(SystemExit):
+        main(["pipeline", "--spec", str(spec_path),
+              "--input", f"envelopes:mongo:{tmp_path / 'env'}", "--show", "0"])
+    assert "sparse row images" in capsys.readouterr().err
+
+
 def test_pipeline_json_string_input(spark):
     steps = parse(json.dumps(SPEC), variables={"ns": "http://x"})
     assert steps[1].conf["uri_prefix"] == "http://x/conv/"
