@@ -234,6 +234,42 @@ def main(argv: list[str] | None = None) -> int:
 
     mode = getattr(args, "mode", "auto")
     mode = None if mode == "auto" else mode  # None → adopt manifest mode
+    if args.cmd in ("stream", "ingest"):
+        from .sources.envelopes import (
+            PARTIAL_DIALECTS,
+            envelope_parser,
+            extended_payload_schema,
+        )
+
+        if args.dialect is None and (
+            args.source_table or args.payload_cols or args.partial_images
+        ):
+            ap.error(
+                "--source-table/--payload-cols/--partial-images require "
+                "--dialect (they only apply to envelope input)"
+            )
+        # one mask decision for both envelope front doors; the envelope
+        # parser refuses a mask from a whole-row dialect and none from mongo
+        mask = (
+            "set_cols"
+            if args.partial_images or args.dialect in PARTIAL_DIALECTS
+            else None
+        )
+        try:
+            payload_schema = (
+                extended_payload_schema(args.payload_cols)
+                if args.payload_cols
+                else None
+            )
+            if args.dialect is not None:
+                # ingest parses with it; for stream it only checks the
+                # arguments — run_stream builds the same parser
+                parse = envelope_parser(
+                    args.dialect, table=args.source_table,
+                    payload_schema=payload_schema, set_cols_col=mask,
+                )
+        except ValueError as e:
+            ap.error(str(e))
     if args.cmd == "gen-wal":
         df = gen_change_events(
             spark,
@@ -270,39 +306,17 @@ def main(argv: list[str] | None = None) -> int:
         tgt.create()
         print(json.dumps({"created": args.table, "mode": tgt.mode}))
     elif args.cmd == "stream":
-        if args.dialect is None and (args.source_table or args.payload_cols):
-            ap.error(
-                "--source-table/--payload-cols require --dialect "
-                "(they only apply to envelope input)"
-            )
-        from .sources.envelopes import PARTIAL_DIALECTS
-
-        stream_partial = (
-            args.partial_images or args.dialect in PARTIAL_DIALECTS
-        )
-        if args.partial_images and args.dialect not in (
-            "wal2json", *PARTIAL_DIALECTS
-        ):
-            ap.error("--partial-images requires a sparse-capable dialect "
-                     f"(wal2json, {', '.join(PARTIAL_DIALECTS)})")
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         cfg = CDCConfig(
-            salted=args.salted, metrics_path=args.metrics,
-            partial_set_col="set_cols" if stream_partial else None,
+            salted=args.salted, metrics_path=args.metrics, partial_set_col=mask
         )
         t0 = time.time()
-        from .sources.envelopes import extended_payload_schema
-
         run_stream(
             spark, args.wal, tgt, args.checkpoint, cfg,
             max_files_per_trigger=args.max_files_per_trigger,
             envelope_dialect=args.dialect,
             source_table=args.source_table,
-            envelope_payload_schema=(
-                extended_payload_schema(args.payload_cols)
-                if args.payload_cols
-                else None
-            ),
+            envelope_payload_schema=payload_schema,
         )
         print(json.dumps({
             "wall_sec": round(time.time() - t0, 2),
@@ -315,54 +329,12 @@ def main(argv: list[str] | None = None) -> int:
         res = apply_batch(tgt, events, args.batch_id, CDCConfig(salted=args.salted))
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "ingest":
-        from .sources.envelopes import (
-            extended_payload_schema,
-            parse_envelope,
-        )
-
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
-        raw = spark.read.text(args.envelopes)
-        ps = (
-            extended_payload_schema(args.payload_cols)
-            if args.payload_cols
-            else None
+        events = parse(spark.read.text(args.envelopes))
+        cfg = CDCConfig(
+            salted=args.salted, dead_letter_dir=args.dead_letter,
+            partial_set_col=mask,
         )
-        from .sources.envelopes import PARTIAL_DIALECTS
-
-        # mongo's wire format is inherently sparse: the cell-level merge
-        # is forced, --partial-images or not (whole-row LWW over $set
-        # patches would null untouched cells)
-        partial = args.partial_images or args.dialect in PARTIAL_DIALECTS
-        if args.partial_images and args.dialect not in (
-            "wal2json", *PARTIAL_DIALECTS
-        ):
-            ap.error("--partial-images requires a sparse-capable dialect "
-                     f"(wal2json, {', '.join(PARTIAL_DIALECTS)})")
-        if partial:
-            if args.dialect == "wal2json":
-                from .sources.wal2json import parse_wal2json
-
-                events = parse_wal2json(
-                    raw, table=args.source_table, payload_schema=ps,
-                    set_cols_col="set_cols",
-                )
-            else:  # mongo — the parser always emits the mask
-                events = parse_envelope(
-                    raw, args.dialect, table=args.source_table,
-                    payload_schema=ps,
-                )
-            cfg = CDCConfig(
-                salted=args.salted, dead_letter_dir=args.dead_letter,
-                partial_set_col="set_cols",
-            )
-        else:
-            events = parse_envelope(
-                raw, args.dialect, table=args.source_table,
-                payload_schema=ps,
-            )
-            cfg = CDCConfig(
-                salted=args.salted, dead_letter_dir=args.dead_letter
-            )
         res = apply_batch(tgt, events, args.batch_id, cfg)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "state":
@@ -539,7 +511,7 @@ def main(argv: list[str] | None = None) -> int:
         elif args.input.startswith("envelopes:"):
             # envelopes:DIALECT:PATH — raw wire-format JSON lines as the
             # pipeline input (the .ktr lifecycle over a topic dump)
-            from .sources.envelopes import PARTIAL_DIALECTS, parse_envelope
+            from .sources.envelopes import envelope_parser
 
             parts = args.input.split(":", 2)
             if len(parts) != 3 or not parts[2]:
@@ -547,15 +519,13 @@ def main(argv: list[str] | None = None) -> int:
                     "--input envelope form is envelopes:DIALECT:PATH "
                     f"(got {args.input!r})"
                 )
-            if parts[1] in PARTIAL_DIALECTS:
-                # pipeline steps see whole rows: a sparse patch's untouched
-                # cells would read as nulls
-                ap.error(
-                    f"dialect {parts[1]!r} emits sparse row images; pipeline "
-                    "steps need whole rows — ingest or stream it into a "
-                    "table first"
-                )
-            df = parse_envelope(spark.read.text(parts[2]), parts[1])
+            try:
+                # pipeline steps see whole rows (set_cols_col=None): a
+                # sparse dialect's untouched cells would read as nulls
+                parse = envelope_parser(parts[1], set_cols_col=None)
+            except ValueError as e:
+                ap.error(str(e))
+            df = parse(spark.read.text(parts[2]))
         else:
             df = spark.read.parquet(args.input)
         t0 = time.time()

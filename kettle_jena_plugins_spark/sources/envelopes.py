@@ -7,8 +7,9 @@ change-event schema (model.CHANGE_EVENT_SCHEMA), so the rest of the
 engine — validation split, LWW reduce, schema evolution, exactly-once
 MERGE (streaming/apply.py) — is dialect-agnostic. ``parse_envelope``
 is the dispatcher that makes that pluggability a one-argument choice,
-used by the CLI's ``ingest`` command (run.py) to apply a file of raw
-JSON-lines envelopes straight onto a lake table.
+used by the CLI's ``ingest``/``stream``/``pipeline`` commands (run.py)
+and by ``run_stream`` (streaming/apply.py). It also owns the sparse-mask
+decision: which dialects may or must carry a set-columns mask.
 
 Reference analogue: the plugin family exposes one Kettle step per
 input shape while sharing the row-level machinery underneath
@@ -23,6 +24,9 @@ messages) — adding a dialect never adds a shuffle.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -34,23 +38,34 @@ from .maxwell import parse_maxwell, to_maxwell_json
 from .mongo import parse_mongo_oplog, to_mongo_oplog
 from .wal2json import parse_wal2json, to_wal2json
 
-#: dialect name → (parser, supports in-stream table filtering)
+#: dialect name → (parser, supports in-stream table filtering, sparseness
+#: of its row images: "never" — whole rows, no mask; "optional" — wal2json's
+#: column array is sparse without REPLICA IDENTITY FULL, so the mask is
+#: opt-in; "always" — mongo's $set/$unset patches are sparse by nature)
 _DIALECTS = {
-    "debezium": (parse_debezium, False),
-    "dms": (parse_dms, True),
-    "maxwell": (parse_maxwell, True),
-    "mongo": (parse_mongo_oplog, True),
-    "wal2json": (parse_wal2json, True),
-    "canal": (parse_canal, True),
+    "debezium": (parse_debezium, False, "never"),
+    "dms": (parse_dms, True, "never"),
+    "maxwell": (parse_maxwell, True, "never"),
+    "mongo": (parse_mongo_oplog, True, "always"),
+    "wal2json": (parse_wal2json, True, "optional"),
+    "canal": (parse_canal, True, "never"),
 }
 
-#: dialects whose wire format is inherently SPARSE: their parsers emit
-#: the set-columns mask and consumers must apply through the cell-level
-#: merge (CDCConfig.partial_set_col) — whole-row LWW would null
-#: untouched cells. wal2json is OPTIONALLY sparse (set_cols_col opt-in).
-PARTIAL_DIALECTS = ("mongo",)
+#: dialects whose wire format is inherently SPARSE: consumers must ask
+#: ``parse_envelope`` for the set-columns mask and apply through the
+#: cell-level merge (CDCConfig.partial_set_col) — whole-row LWW would null
+#: untouched cells. ``parse_envelope(set_cols_col=...)`` is the one way to
+#: get a mask; it refuses a mask from a whole-row dialect and a missing
+#: one from these.
+PARTIAL_DIALECTS = tuple(
+    d for d, (_, _, sparse) in _DIALECTS.items() if sparse == "always"
+)
 
 DIALECTS = tuple(sorted(_DIALECTS))
+
+#: ``set_cols_col`` default: each dialect's natural output — the mask under
+#: its parser's default name for the always-sparse dialects, none otherwise
+_NATURAL = object()
 
 
 def parse_envelope(
@@ -59,6 +74,7 @@ def parse_envelope(
     value_col: str = "value",
     table: str | None = None,
     payload_schema=None,
+    set_cols_col=_NATURAL,
 ) -> DataFrame:
     """Raw envelope JSON strings → canonical change events, by dialect.
 
@@ -67,6 +83,14 @@ def parse_envelope(
     Debezium is topic-per-table — its envelope carries no table name —
     so passing ``table`` with ``dialect="debezium"`` raises instead of
     silently not filtering.
+
+    ``set_cols_col`` names the set-columns mask column (partial row
+    images, operators/lww.py lww_reduce_partial's contract). A name asks
+    for the mask and raises for a whole-row dialect; ``None`` asks for
+    whole rows and raises for an always-sparse dialect (PARTIAL_DIALECTS)
+    — whole-row LWW over its patches would null untouched cells. Left
+    out, each dialect gives its natural output (mongo: the mask as
+    ``set_cols``).
 
     Unknown ops in any dialect surface as null-op rows, which the apply
     path's validation split routes to the dead letter
@@ -86,8 +110,24 @@ def parse_envelope(
     not name, so an evolved producer's new column needs the extended
     schema here to reach the lake's ALTER path (plans/evolution.py).
     """
+    return envelope_parser(
+        dialect, value_col, table, payload_schema, set_cols_col
+    )(raw)
+
+
+def envelope_parser(
+    dialect: str,
+    value_col: str = "value",
+    table: str | None = None,
+    payload_schema=None,
+    set_cols_col=_NATURAL,
+) -> Callable[[DataFrame], DataFrame]:
+    """``parse_envelope`` without the frame: its dialect, table and mask
+    checks run here and raise ``ValueError`` before the caller builds its
+    input — a streaming file source lists its directory when created —
+    and the returned function parses a raw frame."""
     try:
-        parser, filterable = _DIALECTS[dialect]
+        parser, filterable, sparse = _DIALECTS[dialect]
     except KeyError:
         raise ValueError(
             f"unknown dialect {dialect!r}; expected one of {DIALECTS}"
@@ -95,14 +135,28 @@ def parse_envelope(
     kw = {"value_col": value_col}
     if payload_schema is not None:
         kw["payload_schema"] = payload_schema
-    if table is None:
-        return parser(raw, **kw)
-    if not filterable:
+    if table is not None:
+        if not filterable:
+            raise ValueError(
+                "debezium envelopes carry no table name (topic-per-table); "
+                "route tables upstream instead of passing table="
+            )
+        kw["table"] = table
+    if set_cols_col is None and sparse == "always":
         raise ValueError(
-            "debezium envelopes carry no table name (topic-per-table); "
-            "route tables upstream instead of passing table="
+            f"dialect {dialect!r} emits sparse row images (a set-columns "
+            "mask): request it with set_cols_col and apply through the "
+            "cell-level merge — whole rows would null untouched cells"
         )
-    return parser(raw, table=table, **kw)
+    if set_cols_col is not _NATURAL and set_cols_col is not None:
+        if sparse == "never":
+            capable = [d for d in DIALECTS if _DIALECTS[d][2] != "never"]
+            raise ValueError(
+                f"dialect {dialect!r} carries whole row images; a set-columns "
+                f"mask needs a sparse-capable dialect ({', '.join(capable)})"
+            )
+        kw["set_cols_col"] = set_cols_col
+    return functools.partial(parser, **kw)
 
 
 #: type names accepted by extended_payload_schema's "name:type" specs

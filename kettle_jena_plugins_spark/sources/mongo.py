@@ -219,7 +219,9 @@ def to_mongo_oplog(
     sparse = set_col in changes.columns
     ts_obj = F.struct(
         F.struct(
-            F.floor(F.unix_micros("ts") / 1_000_000).cast("long").alias("t"),
+            # exact integer division, as in canal.py: past 2^53 micros
+            # a double quotient rounds up to the next second
+            F.expr("unix_micros(ts) div 1000000").alias("t"),
             F.pmod(F.col("lsn"), F.lit(1 << 32)).alias("i"),
         ).alias("$timestamp")
     )

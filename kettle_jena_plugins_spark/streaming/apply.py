@@ -5,6 +5,14 @@ readStream → foreachBatch → checkpoint). This is the engine's equivalent of
 the reference's whole .ktr pipeline (inject → create model → group-merge →
 serialize, EndToEndIT.java:60-92), re-expressed as one micro-batch function.
 
+Every sink takes the batch's raw events and reduces them itself
+(``merge_batch``: whole-row ``lww_reduce``/``lww_reduce_salted``, or the
+cell-level ``lww_reduce_partial`` when ``partial_set_col`` is set), then
+applies ``transform_reduced`` to the winners — so there is one
+``merge_batch`` call for every target. Envelope input is parsed by
+``parse_envelope``, which alone decides whether a dialect may or must carry
+the set-columns mask.
+
 Exactly-once: Structured Streaming checkpoints source offsets; the target's
 batch-id gate makes the sink idempotent, so replay of a failed/killed batch
 converges to byte-identical state (tests/test_stream_resume.py).
@@ -21,8 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.textnorm import normalize_text
-from ..model import CHANGE_EVENT_SCHEMA, MERGE_KEYS
-from ..operators.lww import lww_reduce, lww_reduce_salted
+from ..model import CHANGE_EVENT_SCHEMA
 from ..operators.validate import ValidationSpec, validate_split
 from ..plans.evolution import ENVELOPE_COLS, evolved_schema
 
@@ -40,13 +47,11 @@ class CDCConfig:
     dead_letter_dir: str | None = None
     metrics_path: str | None = None  # jsonl, one line per batch
     validation: ValidationSpec = field(default_factory=ValidationSpec)
-    evolve: bool = True
     # streaming-only: drop redelivered WAL entries (same lsn) across
-    # micro-batches before foreachBatch, with state bounded by the event-time
-    # watermark (streaming/dedup.py). A cost optimization — the sink's
-    # idempotent LWW merge already converges under duplicates.
+    # micro-batches before foreachBatch, with state bounded by a 10-minute
+    # event-time watermark (streaming/dedup.py). A cost optimization — the
+    # sink's idempotent LWW merge already converges under duplicates.
     stream_dedup: bool = False
-    stream_dedup_watermark: str = "10 minutes"
     # ActionIfNull=WARN accounting for payload columns: nulls in these
     # columns are counted per batch (one tiny agg pass) and surfaced in the
     # metrics jsonl + MergeResult.extra — the engine's analogue of the
@@ -56,19 +61,9 @@ class CDCConfig:
     # the batch's events carry PARTIAL row images: the named array column
     # lists the payload columns each event wrote (wal2json column arrays,
     # Mongo $set patches). Routes the sink through its cell-level merge
-    # (ParquetLakeTarget.merge_batch partial_set_col) — requires a sink
-    # that handles raw events (a whole-row pre-reduce would lose per-cell
-    # write orders). `salted` composes: the cell reduce has its own
-    # two-phase salted form.
+    # (merge_batch partial_set_col). `salted` composes: the cell reduce
+    # has its own two-phase salted form.
     partial_set_col: str | None = None
-    # input-side parallelism floor. WAL segments arrive as few large files
-    # (binlog shipping), so the scan often yields far fewer partitions than
-    # the cluster has cores — the narrow phase (validate → pandas-UDF
-    # normalize → partial LWW agg) then runs nearly serial regardless of
-    # executor count, capping scaling efficiency. "auto" repartitions the
-    # batch to 2×defaultParallelism when the scan is coarser than that;
-    # None disables; an int sets the target explicitly.
-    input_partitions: int | str | None = "auto"
 
 
 def _append_metrics(path: str, record: dict) -> None:
@@ -89,33 +84,22 @@ def apply_batch(
     `stream_id` scopes the idempotence gate to one checkpoint lineage (see
     ParquetLakeTarget.merge_batch)."""
     cfg = cfg or CDCConfig()
-    # a sink whose merge is itself an LWW reduction (parquet lake) takes the
-    # raw events — one shuffle instead of two; any other sink (Iceberg
-    # MERGE forbids multiple source rows per key) gets them pre-reduced
-    raw_sink = getattr(target, "handles_raw_events", False)
-    if cfg.partial_set_col is not None and not raw_sink:
-        raise ValueError(
-            "partial_set_col needs a sink with a cell-level merge "
-            "(ParquetLakeTarget); this target pre-reduces whole rows"
-        )
 
-    # 0. input-parallelism floor (see CDCConfig.input_partitions)
-    if cfg.input_partitions is not None:
-        sc = events.sparkSession.sparkContext
-        target_p = (
-            sc.defaultParallelism * 2
-            if cfg.input_partitions == "auto"
-            else int(cfg.input_partitions)
-        )
-        try:
-            # JVM-side partition probe: df.rdd would build the full
-            # Python-conversion RDD (serializer plan + pickling setup)
-            # just to read a count — measurable at high batch rates
-            n_parts = events._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:  # pragma: no cover - internal-API fallback
-            n_parts = events.rdd.getNumPartitions()
-        if n_parts < target_p:
-            events = events.repartition(target_p)
+    # 0. input-parallelism floor. WAL segments arrive as few large files
+    # (binlog shipping), so the scan often yields far fewer partitions than
+    # the cluster has cores — the narrow phase (validate → partial LWW agg)
+    # would then run nearly serial. Repartition to 2×defaultParallelism
+    # when the scan is coarser than that.
+    target_p = events.sparkSession.sparkContext.defaultParallelism * 2
+    try:
+        # JVM-side partition probe: df.rdd would build the full
+        # Python-conversion RDD (serializer plan + pickling setup)
+        # just to read a count — measurable at high batch rates
+        n_parts = events._jdf.queryExecution().toRdd().getNumPartitions()
+    except Exception:  # pragma: no cover - internal-API fallback
+        n_parts = events.rdd.getNumPartitions()
+    if n_parts < target_p:
+        events = events.repartition(target_p)
 
     # 1. validation split (SHACL analogue): bad rows → dead letter
     ok, dead = validate_split(events, cfg.validation)
@@ -147,19 +131,15 @@ def apply_batch(
 
     # 3. schema evolution: ALTER before the merge plan is analyzed
     tgt_schema = target.schema()
-    if cfg.evolve:
-        batch_schema = ok.schema
-        if cfg.partial_set_col is not None:
-            # the set-columns mask is envelope metadata, not payload —
-            # it must never be ALTERed into the target
-            batch_schema = StructType(
-                [f for f in batch_schema.fields
-                 if f.name != cfg.partial_set_col]
-            )
-        new_schema = evolved_schema(tgt_schema, batch_schema)
-        if new_schema is not None:
-            target.evolve_schema(new_schema)
-            tgt_schema = new_schema
+    # the set-columns mask is envelope metadata, not payload — it must
+    # never be ALTERed into the target
+    batch_schema = StructType(
+        [f for f in ok.schema.fields if f.name != cfg.partial_set_col]
+    )
+    new_schema = evolved_schema(tgt_schema, batch_schema)
+    if new_schema is not None:
+        target.evolve_schema(new_schema)
+        tgt_schema = new_schema
     # align batch to the (possibly evolved) target payload set: missing
     # payload columns → null (late producers), key/ts casts to target types
     cols = [F.col(c) for c in ENVELOPE_COLS]
@@ -186,26 +166,15 @@ def apply_batch(
                 k: int(v or 0) for k, v in ok.agg(*aggs).first().asDict().items()
             }
 
-    # 4. idempotent MERGE commit. The raw sink reduces (salted for hot-key
-    #    skew) and normalizes after its own reduce; otherwise reduce here to
-    #    one final event per key (Iceberg MERGE cardinality) and normalize
-    #    the winners only.
-    if raw_sink:
-        res = target.merge_batch(
-            ok, batch_id, stream_id=stream_id,
-            salted=cfg.salted, salt_buckets=cfg.salt_buckets,
-            transform_reduced=(
-                _normalize if (cfg.normalize or cfg.redact) else None
-            ),
-            partial_set_col=cfg.partial_set_col,
-        )
-    else:
-        reduced = (
-            lww_reduce_salted(ok, salt_buckets=cfg.salt_buckets)
-            if cfg.salted
-            else lww_reduce(ok)
-        )
-        res = target.merge_batch(_normalize(reduced), batch_id, stream_id=stream_id)
+    # 4. idempotent MERGE commit: the sink LWW-reduces the raw events
+    #    (salted for hot-key skew, cell-level for partial images) and
+    #    normalizes the winners only
+    res = target.merge_batch(
+        ok, batch_id, stream_id=stream_id,
+        salted=cfg.salted, salt_buckets=cfg.salt_buckets,
+        transform_reduced=_normalize if (cfg.normalize or cfg.redact) else None,
+        partial_set_col=cfg.partial_set_col,
+    )
     res.extra["dead_letter_rows"] = n_dead
     if warn_nulls:
         res.extra["warn_nulls"] = warn_nulls
@@ -253,72 +222,33 @@ def run_stream(
     dialect parser (sources/envelopes.py — a narrow scan-stage
     projection, so the stream plan stays one stage up to the sink) before
     the same validate/evolve/MERGE path. ``source_table`` filters
-    multiplexed streams (Maxwell/wal2json/Canal). This is the streaming
-    form of the CLI's ``ingest``; checkpoint/resume semantics are
-    identical to the parquet WAL form."""
+    multiplexed streams (Maxwell/wal2json/Canal). The parser emits the
+    set-columns mask under ``cfg.partial_set_col`` and refuses a dialect
+    that cannot carry one, or a sparse dialect without one. This is the
+    streaming form of the CLI's ``ingest``; checkpoint/resume semantics
+    are identical to the parquet WAL form."""
     cfg = cfg or CDCConfig()
+    reader = spark.readStream
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if envelope_dialect is not None:
-        reader = spark.readStream
-        if max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", max_files_per_trigger
-            )
-        from ..sources.envelopes import PARTIAL_DIALECTS
+        from ..sources.envelopes import envelope_parser
 
-        if (
-            envelope_dialect in PARTIAL_DIALECTS
-            and cfg.partial_set_col is None
-        ):
-            raise ValueError(
-                f"dialect {envelope_dialect!r} emits sparse row images "
-                "(a set-columns mask): set CDCConfig.partial_set_col — "
-                "whole-row LWW would null untouched cells"
-            )
-        if cfg.partial_set_col is not None:
-            # partial row images need the set-columns mask from the wire
-            if envelope_dialect == "wal2json":
-                from ..sources.wal2json import parse_wal2json
-
-                stream = parse_wal2json(
-                    reader.text(events_dir),
-                    table=source_table,
-                    payload_schema=envelope_payload_schema,
-                    set_cols_col=cfg.partial_set_col,
-                )
-            elif envelope_dialect == "mongo":
-                from ..sources.mongo import parse_mongo_oplog
-
-                stream = parse_mongo_oplog(
-                    reader.text(events_dir),
-                    table=source_table,
-                    payload_schema=envelope_payload_schema,
-                    set_cols_col=cfg.partial_set_col,
-                )
-            else:
-                raise ValueError(
-                    "partial_set_col streaming requires a sparse-capable "
-                    "dialect (wal2json, mongo)"
-                )
-        else:
-            from ..sources.envelopes import parse_envelope
-
-            stream = parse_envelope(
-                reader.text(events_dir),
-                envelope_dialect,
-                table=source_table,
-                payload_schema=envelope_payload_schema,
-            )
+        # resolved before reader.text lists events_dir, so a refused
+        # dialect/table/mask raises first
+        parse = envelope_parser(
+            envelope_dialect,
+            table=source_table,
+            payload_schema=envelope_payload_schema,
+            set_cols_col=cfg.partial_set_col,
+        )
+        stream = parse(reader.text(events_dir))
     else:
-        reader = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", max_files_per_trigger
-            )
-        stream = reader.parquet(events_dir)
+        stream = reader.schema(schema).parquet(events_dir)
     if cfg.stream_dedup:
         from .dedup import watermarked_dedup
 
-        stream = watermarked_dedup(stream, cfg.stream_dedup_watermark)
+        stream = watermarked_dedup(stream)
 
     stream_id = os.path.abspath(checkpoint_dir)  # one lineage per checkpoint
 

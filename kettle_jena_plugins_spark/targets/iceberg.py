@@ -1,11 +1,15 @@
 """IcebergTarget — the production MERGE INTO path for real clusters.
 
-Same interface as ParquetLakeTarget; used when the Iceberg runtime jar +
-catalog extensions are configured (session.iceberg_confs). The sandbox ships
-no Iceberg jar, so the live path is covered by a skip-guarded integration
-test; the SQL the target emits is built by pure functions below and
-plan-level tests pin the exact DDL/MERGE text and the commit sequence
-(tests/test_iceberg_plan.py).
+Same interface as ParquetLakeTarget, ``merge_batch`` included: it takes
+the batch's raw events and reduces them itself (``lww_reduce``, or
+``lww_reduce_salted`` when salted; ``lww_reduce_partial`` with the emitted
+batch mask for partial images — MERGE forbids multiple source rows per
+key), applies ``transform_reduced`` to the winners, then MERGEs. Used when
+the Iceberg runtime jar + catalog extensions are configured
+(session.iceberg_confs). The repository ships no Iceberg jar, so the live
+path is covered by a skip-guarded integration test; the SQL the target
+emits is built by pure functions below and plan-level tests pin the exact
+DDL/MERGE text and the commit sequence (tests/test_iceberg_plan.py).
 
 Idempotence: batch-id + per-bucket LSN high-watermarks are stored in the
 table's snapshot summary via `ALTER TABLE ... SET TBLPROPERTIES` in the same
@@ -28,7 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import MERGE_KEYS, TRANSCRIPTS_SCHEMA
+from ..operators.lww import lww_reduce, lww_reduce_partial, lww_reduce_salted
 from ..plans.evolution import IncompatibleSchemaChange, _wider
+from .parquet_lake import MergeResult  # shared result type
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "lake") -> bool:
@@ -240,23 +246,26 @@ class IcebergTarget:
 
     def merge_batch(
         self,
-        reduced: DataFrame,
+        events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
+        salted: bool = False,
+        salt_buckets: int = 16,
+        transform_reduced=None,
         partial_set_col: str | None = None,
-    ):
-        """One LWW-reduced micro-batch → MERGE INTO keyed on (conv_id,
+    ) -> MergeResult:
+        """One micro-batch of raw change events → LWW-reduced to one row
+        per key → ``transform_reduced`` → MERGE INTO keyed on (conv_id,
         turn_idx), LWW-guarded on (ts, lsn) so late replays are no-ops.
 
         Commit sequence (plan-level-pinned): idempotence gate (stream lineage
         + batch-id) → MERGE → watermark + batch-id properties commit.
 
-        ``partial_set_col``: ``reduced`` came from
-        lww_reduce_partial(emit_set_col=...) — sparse row images, one row
-        per key with the batch mask — and the MERGE overwrites only masked
-        cells (merge_into_partial_sql). Requires soft deletes."""
-        from .parquet_lake import MergeResult  # shared result type
-
+        ``partial_set_col``: the events are sparse row images carrying this
+        set-columns mask; they reduce through
+        lww_reduce_partial(emit_set_col=...) — one row per key with the
+        batch mask — and the MERGE overwrites only masked cells
+        (merge_into_partial_sql). Requires soft deletes."""
         if partial_set_col is not None and self.hard_delete:
             raise ValueError(
                 "partial merges require soft deletes: a hard-deleted key "
@@ -269,6 +278,17 @@ class IcebergTarget:
         if same_lineage and batch_id <= self.last_committed_batch():
             return MergeResult(batch_id=batch_id, applied=False)
 
+        if partial_set_col is not None:
+            reduced = lww_reduce_partial(
+                events, set_col=partial_set_col, emit_set_col=partial_set_col,
+                salt_buckets=salt_buckets if salted else None,
+            )
+        elif salted:
+            reduced = lww_reduce_salted(events, salt_buckets=salt_buckets)
+        else:
+            reduced = lww_reduce(events)
+        if transform_reduced is not None:
+            reduced = transform_reduced(reduced)
         payload = [
             c
             for c in reduced.columns

@@ -95,11 +95,6 @@ class MergeResult:
 
 
 class ParquetLakeTarget:
-    # merge_batch is itself an LWW reduction, so the apply pipeline may pass
-    # raw (unreduced) events — one shuffle instead of two. The Iceberg path
-    # cannot (MERGE forbids multiple source rows per target key).
-    handles_raw_events = True
-
     def __init__(
         self,
         spark: SparkSession,
@@ -167,9 +162,12 @@ class ParquetLakeTarget:
         snapshot property from FIXTURES.md §1)."""
         return {k: int(v) for k, v in self.manifest().get("watermarks", {}).items()}
 
-    def schema(self) -> T.StructType:
-        m = self.manifest()
+    @staticmethod
+    def _current_schema(m: dict) -> T.StructType:
         return T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+
+    def schema(self) -> T.StructType:
+        return self._current_schema(self.manifest())
 
     def _commit(self, manifest: dict) -> int:
         os.makedirs(self._snap_dir, exist_ok=True)
@@ -273,7 +271,7 @@ class ParquetLakeTarget:
         than one layer (merge-on-read). version → time travel to that
         committed snapshot."""
         m = self.manifest(version)
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+        cur_schema = self._current_schema(m)
         entries = [
             e for b, e in m["buckets"].items()
             if buckets is None or int(b) in buckets
@@ -507,8 +505,7 @@ class ParquetLakeTarget:
         columns / widened types). Old file groups are aligned lazily on read.
         Returns True if a new schema version was committed."""
         m = self.manifest()
-        cur = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
-        if cur.jsonValue() == new_schema.jsonValue():
+        if self._current_schema(m).jsonValue() == new_schema.jsonValue():
             return False
         sid = max(int(k) for k in m["schemas"]) + 1
         m["schemas"][str(sid)] = new_schema.jsonValue()
@@ -521,7 +518,7 @@ class ParquetLakeTarget:
 
     def merge_batch(
         self,
-        reduced: DataFrame,
+        events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
         salted: bool = False,
@@ -529,7 +526,7 @@ class ParquetLakeTarget:
         transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
-        """Apply one micro-batch of change events (raw or pre-reduced).
+        """Apply one micro-batch of raw change events.
 
         Idempotent: replaying an already-committed batch_id OF THE SAME STREAM
         LINEAGE is a no-op. Spark's foreachBatch batch ids are monotone only
@@ -576,13 +573,13 @@ class ParquetLakeTarget:
                                snapshot_version=m["version"])
 
         cur_sid = m["current_schema_id"]
-        cur_schema = T.StructType.fromJson(m["schemas"][str(cur_sid)])
+        cur_schema = self._current_schema(m)
         cell_cols = [
             f.name for f in cur_schema.fields if f.name not in (*MERGE_KEYS, "ts")
         ]
         wm = {k: int(v) for k, v in m.get("watermarks", {}).items()}
 
-        batch = reduced.withColumn("_b", self._bucket_col())
+        batch = events.withColumn("_b", self._bucket_col())
         # late events = lsn at-or-below the bucket's committed high-watermark
         # (duplicate/out-of-order replays)
         if wm:
@@ -721,7 +718,6 @@ class ParquetLakeTarget:
         """Explicit compaction API (maintenance job): resolve layer stacks.
         Returns number of buckets compacted."""
         m = self.manifest()
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
         which = [
             b
             for b, e in m["buckets"].items()
@@ -730,7 +726,7 @@ class ParquetLakeTarget:
         if not which:
             return 0
         new_entries = self._compact_layers(
-            m["buckets"], which, cur_schema, m["current_schema_id"]
+            m["buckets"], which, self._current_schema(m), m["current_schema_id"]
         )
         m["buckets"].update(new_entries)
         m["version"] += 1

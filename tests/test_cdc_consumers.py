@@ -893,6 +893,21 @@ def test_mongo_oplog_patch_semantics_and_filters(spark):
     assert (repl["role"], repl["text"], repl["tool"]) == ("bot", "replaced", None)
 
 
+def test_mongo_oplog_seconds_exact_past_2_53_micros(spark):
+    """The rendered oplog ``t`` is the event's unix second by exact
+    integer division: at 2300-01-01T00:00:00.999999Z the unix micros
+    (10413792000999999) exceed 2^53, where double division rounds up to
+    the next second."""
+    import json as _json
+
+    from kettle_jena_plugins_spark.sources.mongo import to_mongo_oplog
+
+    ts = datetime.datetime(2300, 1, 1, 0, 0, 0, 999999)
+    ch = _changes(spark, [("I", 7, ts, "c1", 0, "user", "hi", None)])
+    env = to_mongo_oplog(ch).collect()[0]["value"]
+    assert _json.loads(env)["ts"]["$timestamp"] == {"t": 10413792000, "i": 7}
+
+
 def test_mongo_ingest_forces_cell_merge(spark, tmp_path, capsys):
     """CLI ingest --dialect mongo auto-enables the cell-level merge (the
     oplog is inherently sparse — whole-row LWW would null untouched

@@ -99,10 +99,9 @@ def test_partial_merge_rejects_hard_delete_and_emits_partial_sql(
 ):
     """merge_batch(partial_set_col=...) must route through the partial
     builder (CASE-masked SET clauses in the recorded MERGE), exclude the
-    mask from the payload columns, and refuse hard_delete."""
+    mask from the payload columns, and refuse hard_delete. The sink
+    reduces the raw events itself."""
     import datetime as dt
-
-    from kettle_jena_plugins_spark.operators.lww import lww_reduce_partial
 
     rows = [
         ("U", 2, dt.datetime(2026, 1, 1, 0, 0, 2), "c1", 0,
@@ -112,18 +111,16 @@ def test_partial_merge_rejects_hard_delete_and_emits_partial_sql(
         "op string, lsn long, ts timestamp, conv_id string, turn_idx int, "
         "role string, text string, tool string, set_cols array<string>"
     )
-    reduced = lww_reduce_partial(
-        spark.createDataFrame(rows, schema), emit_set_col="set_cols"
-    )
+    events = spark.createDataFrame(rows, schema)
 
     tgt = IcebergTarget(spark, table=TBL, n_buckets=4, hard_delete=True)
     with pytest.raises(ValueError, match="soft deletes"):
-        tgt.merge_batch(reduced, 0, partial_set_col="set_cols")
+        tgt.merge_batch(events, 0, partial_set_col="set_cols")
 
     tgt = IcebergTarget(spark, table=TBL, n_buckets=4)
     rec = _Recorder(spark, {})
     monkeypatch.setattr(tgt.spark, "sql", rec, raising=False)
-    res = tgt.merge_batch(reduced, 0, partial_set_col="set_cols")
+    res = tgt.merge_batch(events, 0, partial_set_col="set_cols")
     monkeypatch.undo()
     assert res.applied
     merge = next(s for s in rec.stmts if s.startswith("MERGE"))

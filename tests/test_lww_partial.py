@@ -93,6 +93,27 @@ def test_out_of_order_and_duplicate_delivery(spark):
     assert got == {("a", 0): ("assistant", "late", None, 3)}
 
 
+def test_duplicate_order_d_u_tie_break_diverges_from_whole_row(spark):
+    """A D and a U sharing one (ts, lsn) — a malformed log — resolve
+    differently by form, pinned here as-is: the whole-row reduce
+    (lww_reduce) lets the U win through its ``op`` tiebreak ('U' > 'D');
+    the cell reduce's strict visibility test (a write is visible only if
+    NEWER than the tombstone) lets the D win."""
+    from kettle_jena_plugins_spark.operators.lww import lww_reduce
+
+    rows = [
+        ev("I", 1, 1, "a", 0, role="user", text="hello",
+           set_cols=("role", "text", "tool")),
+        ev("D", 2, 2, "a", 0),
+        ev("U", 2, 2, "a", 0, text="edited", set_cols=("text",)),
+    ]
+    whole = lww_reduce(make(spark, rows).drop("set_cols")).collect()
+    assert [(r["op"], r["lsn"], r["text"]) for r in whole] == [
+        ("U", 2, "edited")
+    ]
+    assert rows_by_key(lww_state_partial(make(spark, rows))) == {}
+
+
 def test_single_shuffle_with_map_side_combine(spark):
     """Scale pin, like the whole-row LWW's: every per-cell aggregate must
     run PARTIAL below ONE key Exchange — shuffle volume stays ~#keys, and

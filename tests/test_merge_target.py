@@ -221,6 +221,34 @@ def test_mor_whole_row_merge_below_threshold_is_one_job(spark, tmp_path, spark_j
     t.drop()
 
 
+def test_apply_batch_whole_row_lake_job_count(spark, tmp_path, spark_jobs):
+    """apply_batch adds no Spark job of its own to a small whole-row lake
+    batch: validation, evolution and alignment are lazy, and the
+    input-parallelism floor probes partitions without an action."""
+    t = ParquetLakeTarget(
+        spark, str(tmp_path / "mor"), n_buckets=2, mode="mor", compact_threshold=3
+    )
+    t.create()
+    apply_batch(t, make_events(spark, [ev("I", 1, 1, "a", 0, text="v0")]), 0)
+    batch = make_events(spark, [
+        ev("U", 2, 2, "a", 0, text="v1"),
+        ev("I", 3, 3, "b", 1, text="w"),
+        ev("D", 4, 4, "c", 2),
+    ])
+    # adaptive execution submits each shuffle stage as its own job; with it
+    # off, one job is one action
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with spark_jobs() as jobs:
+            res = apply_batch(t, batch, 1)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs["n"] == 1
+    assert res.applied and res.events_in == 3
+    t.drop()
+
+
 def test_cow_and_mor_report_equal_batch_counts(spark, tmp_path):
     """One merge path: the mode only sets the compaction threshold, so both
     modes report the same counts for the same batch sequence — including a

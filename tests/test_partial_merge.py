@@ -152,13 +152,6 @@ def test_set_cols_mask_never_evolves_target_schema(spark, target):
 
 
 def test_partial_rejects_whole_row_sink_composes_with_salted(spark, target):
-    class WholeRowSink:  # no handles_raw_events: no cell-level merge
-        pass
-
-    df = make(spark, [ev("I", 1, 1, "a", 0, role="u",
-                         set_cols=("role",))])
-    with pytest.raises(ValueError, match="cell-level merge"):
-        apply_batch(WholeRowSink(), df, 0, cfg=CFG)
     # salted composes: the cell reduce pre-reduces per (keys, salt) with
     # the same associative struct maxes — hot-key path, same semantics
     salted_cfg = CDCConfig(normalize=False, partial_set_col="set_cols",
@@ -302,3 +295,19 @@ def test_cli_ingest_partial_images(spark, tmp_path, capsys):
         main(["ingest", "--envelopes", str(tmp_path / "b0.jsonl"),
               "--dialect", "debezium", "--table", tbl,
               "--batch-id", "9", "--partial-images"])
+
+
+def test_cli_stream_partial_images_needs_sparse_dialect(tmp_path, capsys):
+    """`run stream --partial-images` is a usage error without a dialect or
+    with a whole-row one; the check runs before the stream starts."""
+    from kettle_jena_plugins_spark.run import main
+
+    base = ["stream", "--wal", str(tmp_path), "--table", str(tmp_path / "t"),
+            "--checkpoint", str(tmp_path / "ck"), "--partial-images"]
+    with pytest.raises(SystemExit):
+        main(base)
+    assert "require --dialect" in capsys.readouterr().err
+    with pytest.raises(SystemExit):
+        main([*base, "--dialect", "debezium"])
+    assert "sparse-capable dialect" in capsys.readouterr().err
+    assert not (tmp_path / "ck").exists()
