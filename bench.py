@@ -9,7 +9,8 @@ oracle-checked analytical queries at $SPARK_GRAFT_SF_DIR.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default all), BENCH_N_EVENTS (default 1_000_000),
-BENCH_SALTED=1, BENCH_HOT_FRAC (default 0.2).
+BENCH_HOT_FRAC (default 0.2). Hot keys need no knob: the LWW reduce's
+map-side partial aggregate absorbs them (BENCH.md "Hot-key skew").
 """
 
 from __future__ import annotations
@@ -28,10 +29,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 N_EVENTS = int(os.environ.get("BENCH_N_EVENTS", 1_000_000))
 N_BATCHES = int(os.environ.get("BENCH_N_BATCHES", 4))
 HOT_FRAC = float(os.environ.get("BENCH_HOT_FRAC", 0.2))
-# salting is off by default: the agg-based LWW absorbs hot keys via map-side
-# partial aggregation; salting (two-phase) only pays off when a single key's
-# post-partial volume still overwhelms one reducer (see BENCH.md)
-SALTED = os.environ.get("BENCH_SALTED", "0") == "1"
 MODE = os.environ.get("BENCH_MODE", "mor")  # cow | mor
 
 
@@ -67,7 +64,7 @@ def bench_cdc_apply(spark) -> tuple[float, dict]:
         bounds = [
             int(N_EVENTS * i / N_BATCHES) for i in range(N_BATCHES + 1)
         ]
-        cfg = CDCConfig(salted=SALTED, normalize=True)
+        cfg = CDCConfig(normalize=True)
         # best-of-N repeats: identical runs vary up to 3x on this shared
         # host (BENCH.md); min-wall is the least-noisy estimator
         wall, n_events = float("inf"), 0
@@ -91,7 +88,6 @@ def bench_cdc_apply(spark) -> tuple[float, dict]:
             "events": n_events,
             "events_per_sec": round(n_events / wall),
             "final_rows": tgt.read().count(),
-            "salted": SALTED,
             "mode": MODE,
         }
     finally:

@@ -55,7 +55,7 @@ d = tempfile.mkdtemp(prefix=f"scale{cores}-", dir="/dev/shm")
 tgt = ParquetLakeTarget(spark, f"{d}/tbl", n_buckets=32, mode="mor")
 tgt.create()
 bounds = [int(n * i / nb) for i in range(nb + 1)]
-cfg = CDCConfig(salted=False, normalize=True)
+cfg = CDCConfig(normalize=True)
 t0 = time.time()
 events = 0
 for i in range(nb):

@@ -66,7 +66,7 @@ paths = [p for s in shards for p in glob.glob(f"{wal}/shard={s}")]
 df = spark.read.parquet(*paths)
 tgt = ParquetLakeTarget(spark, f"{out}/tbl{wid}", n_buckets=4, mode="mor")
 tgt.create()
-cfg = CDCConfig(salted=False, normalize=True)
+cfg = CDCConfig(normalize=True)
 # barrier: everyone reports ready, coordinator writes GO, all start together
 open(os.path.join(barrier, f"ready-{wid}"), "w").close()
 while not os.path.exists(os.path.join(barrier, "GO")):

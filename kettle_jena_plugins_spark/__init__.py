@@ -12,7 +12,8 @@ A brand-new engine (NOT a port) with the query/data-processing capabilities of
 - validation split / dead-letter (reference: shacl/JenaShaclStep.java)
 
 plus the CDC machinery the north rule requires (LWW ordered by (ts, lsn),
-idempotent commit sequencing, schema evolution, salted skew handling,
+idempotent commit sequencing, schema evolution, hot-key skew absorbed by
+the LWW reduce's map-side partial aggregate (no salting option),
 checkpoint/resume) and large-scale training-data ops (dedup, similarity
 search, text analysis, multimodal plumbing).
 """

@@ -13,11 +13,12 @@ Scale design:
   aggregation (partial ``max_by`` per input partition before the shuffle), so
   with u updates/key only ~n_keys rows cross the wire instead of all n_events.
   A window would sort entire key partitions and ship every row.
-- ``lww_reduce_salted`` adds an explicit two-phase pre-reduction keyed on
-  (key, salt) for hot-conversation skew (north rule). Phase 1 shrinks each hot
-  key to SALT rows; phase 2 is a tiny final reduce. Salting only touches the
-  pre-aggregation; the final reduce is unsalted per (conv_id, turn_idx), so
-  LWW semantics are unchanged (max is associative/commutative).
+- Hot-key skew is absorbed by that same map-side partial aggregate: each hot
+  key reaches its reducer as at most one row per map task, however many
+  events hit it, so the apply path has no salting option.
+  ``lww_reduce_salted`` is kept only as a reference formulation (like
+  ``lww_reduce_window``): ``lww_reduce`` on (key, salt), then on key, which
+  the ``cdc_lww_state_salted`` query cross-checks against the oracle.
 - Determinism: the ordering struct is (ts, lsn, op) — lsn is unique per event
   in a well-formed log; duplicates (same lsn redelivered) carry identical
   payloads, and `op` breaks any residual tie totally for byte-identical replay.
@@ -66,22 +67,14 @@ def lww_reduce_salted(
     order: Sequence[str] = LWW_ORDER,
     salt_buckets: int = 16,
 ) -> DataFrame:
-    """Two-phase LWW for hot-key skew: pre-reduce on (keys, salt), then reduce
-    on keys. Correct because max_by over a total order is associative."""
-    payload = [c for c in changes.columns if c not in keys]
-    lead = [*order, "op"]
-    rest = [c for c in payload if c not in lead]
-    winner = F.max(
-        F.struct(*[F.col(c) for c in lead], *[F.col(c) for c in rest])
-    ).alias("w")
-    salted = changes.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets))
-    )
-    phase1 = (
-        salted.groupBy(*[F.col(k) for k in keys], F.col("__salt"))
-        .agg(winner)
-        .select(*keys, *[F.col(f"w.{c}").alias(c) for c in payload])
-    )
+    """Reference two-phase formulation of ``lww_reduce``: reduce on (keys,
+    salt), then on keys. Equal to ``lww_reduce`` because the winner is a max
+    over a total order (associative); not used by the apply path, whose
+    map-side partial aggregate already absorbs hot keys."""
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets))
+    phase1 = lww_reduce(
+        changes.withColumn("__salt", salt), keys=(*keys, "__salt"), order=order
+    ).drop("__salt")
     return lww_reduce(phase1, keys=keys, order=order)
 
 
@@ -91,7 +84,6 @@ def lww_reduce_partial(
     order: Sequence[str] = LWW_ORDER,
     set_col: str = "set_cols",
     payload: Sequence[str] | None = None,
-    salt_buckets: int | None = None,
     emit_set_col: str | None = None,
 ) -> DataFrame:
     """Column-level LWW for PARTIAL row images (sparse updates).
@@ -121,13 +113,9 @@ def lww_reduce_partial(
     Scale design: ONE hash aggregation — per-column filtered
     ``max(struct(order, value))`` plus the tombstone/liveness maxes —
     so map-side partial aggregation applies to every cell column and
-    only ~n_keys rows cross the wire, exactly like lww_reduce. No
-    window, no second shuffle, no Python. ``salt_buckets`` adds the
-    same two-phase pre-reduction as lww_reduce_salted for hot-key skew
-    — valid here because every aggregate (tombstone, liveness, per-cell
-    winner) is an associative max over its own struct, so phase 1 on
-    (keys, salt) keeps per-cell orders intact and phase 2 just maxes
-    the already-reduced structs.
+    only ~n_keys rows cross the wire, exactly like lww_reduce (which is
+    also what absorbs hot-key skew). No window, no second shuffle, no
+    Python.
 
     Output: ONE row per key — keys, ``op`` ('U' if the key is live, 'D'
     if its latest action is a tombstone), the order columns of the
@@ -165,21 +153,7 @@ def lww_reduce_partial(
                 )
             ).alias(f"__w_{c}")
         )
-    if salt_buckets:
-        salted = changes.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets)),
-        )
-        phase1 = salted.groupBy(*[F.col(k) for k in keys], F.col("__salt")).agg(
-            *aggs
-        )
-        g = phase1.groupBy(*[F.col(k) for k in keys]).agg(
-            F.max("__del").alias("__del"),
-            F.max("__live").alias("__live"),
-            *[F.max(f"__w_{c}").alias(f"__w_{c}") for c in payload],
-        )
-    else:
-        g = changes.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    g = changes.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
 
     def visible(o):
         return F.col("__del").isNull() | (o > F.col("__del"))

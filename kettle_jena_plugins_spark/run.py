@@ -96,7 +96,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--table", required=True)
     s.add_argument("--checkpoint", required=True)
     s.add_argument("--metrics", default=None)
-    s.add_argument("--salted", action="store_true")
     s.add_argument("--max-files-per-trigger", type=int, default=None)
     s.add_argument("--dialect", default=None,
                    choices=DIALECTS,
@@ -120,7 +119,6 @@ def main(argv: list[str] | None = None) -> int:
     a.add_argument("--events", required=True)
     a.add_argument("--table", required=True)
     a.add_argument("--batch-id", type=int, required=True)
-    a.add_argument("--salted", action="store_true")
     a.add_argument("--mode", choices=("cow", "mor", "auto"), default="auto",
                    help="auto = the mode recorded in the table's manifest")
 
@@ -141,7 +139,6 @@ def main(argv: list[str] | None = None) -> int:
                      help="extra row columns as 'name:type,...' (schema "
                      "evolution: an evolved producer's added columns; "
                      "the lake ALTERs on first sight)")
-    ing.add_argument("--salted", action="store_true")
     ing.add_argument("--partial-images", action="store_true",
                      help="treat updates as PARTIAL row images: the "
                      "envelope's column list becomes the set-columns mask "
@@ -228,6 +225,10 @@ def main(argv: list[str] | None = None) -> int:
     pl.add_argument("--checkpoint", default=None)
 
     args = ap.parse_args(argv)
+    if args.cmd == "index" and args.action != "compact" and not args.docs:
+        ap.error(f"index {args.action} requires --docs")
+    if args.cmd == "pipeline" and args.stream and not args.checkpoint:
+        ap.error("pipeline --stream requires --checkpoint")
     spark = get_spark(
         master=args.master, shuffle_partitions=args.shuffle_partitions
     )
@@ -307,9 +308,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"created": args.table, "mode": tgt.mode}))
     elif args.cmd == "stream":
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
-        cfg = CDCConfig(
-            salted=args.salted, metrics_path=args.metrics, partial_set_col=mask
-        )
+        cfg = CDCConfig(metrics_path=args.metrics, partial_set_col=mask)
         t0 = time.time()
         run_stream(
             spark, args.wal, tgt, args.checkpoint, cfg,
@@ -326,15 +325,12 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "apply":
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         events = spark.read.parquet(args.events)
-        res = apply_batch(tgt, events, args.batch_id, CDCConfig(salted=args.salted))
+        res = apply_batch(tgt, events, args.batch_id)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "ingest":
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         events = parse(spark.read.text(args.envelopes))
-        cfg = CDCConfig(
-            salted=args.salted, dead_letter_dir=args.dead_letter,
-            partial_set_col=mask,
-        )
+        cfg = CDCConfig(dead_letter_dir=args.dead_letter, partial_set_col=mask)
         res = apply_batch(tgt, events, args.batch_id, cfg)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "state":
@@ -412,8 +408,6 @@ def main(argv: list[str] | None = None) -> int:
             out["wall_sec"] = round(time.time() - t0, 2)
             print(json.dumps(out))
             return 0
-        if not args.docs:
-            raise SystemExit("index: --docs is required for this action")
         docs = spark.read.parquet(args.docs)
         if args.action in ("build", "append"):
             t0 = time.time()
@@ -493,7 +487,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.stream:
             from .plans.pipeline import run_pipeline_stream
 
-            assert args.checkpoint, "--stream requires --checkpoint"
             t0 = time.time()
             run_pipeline_stream(
                 spark, args.input, steps, args.checkpoint,

@@ -6,8 +6,8 @@ the reference's whole .ktr pipeline (inject → create model → group-merge →
 serialize, EndToEndIT.java:60-92), re-expressed as one micro-batch function.
 
 Every sink takes the batch's raw events and reduces them itself
-(``merge_batch``: whole-row ``lww_reduce``/``lww_reduce_salted``, or the
-cell-level ``lww_reduce_partial`` when ``partial_set_col`` is set), then
+(``merge_batch``: whole-row ``lww_reduce``, or the cell-level
+``lww_reduce_partial`` when ``partial_set_col`` is set), then
 applies ``transform_reduced`` to the winners — so there is one
 ``merge_batch`` call for every target. Envelope input is parsed by
 ``parse_envelope``, which alone decides whether a dialect may or must carry
@@ -36,8 +36,6 @@ from ..plans.evolution import ENVELOPE_COLS, evolved_schema
 
 @dataclass
 class CDCConfig:
-    salted: bool = False
-    salt_buckets: int = 16
     normalize: bool = True
     # ingest-time PII-style scrubbing (operators/text.py:redact_text):
     # applied with normalize, POST-reduce on LWW winners only — chained
@@ -61,8 +59,7 @@ class CDCConfig:
     # the batch's events carry PARTIAL row images: the named array column
     # lists the payload columns each event wrote (wal2json column arrays,
     # Mongo $set patches). Routes the sink through its cell-level merge
-    # (merge_batch partial_set_col). `salted` composes: the cell reduce
-    # has its own two-phase salted form.
+    # (merge_batch partial_set_col).
     partial_set_col: str | None = None
 
 
@@ -167,11 +164,10 @@ def apply_batch(
             }
 
     # 4. idempotent MERGE commit: the sink LWW-reduces the raw events
-    #    (salted for hot-key skew, cell-level for partial images) and
-    #    normalizes the winners only
+    #    (cell-level for partial images; hot keys are absorbed by the
+    #    reduce's map-side partial aggregate) and normalizes the winners only
     res = target.merge_batch(
         ok, batch_id, stream_id=stream_id,
-        salted=cfg.salted, salt_buckets=cfg.salt_buckets,
         transform_reduced=_normalize if (cfg.normalize or cfg.redact) else None,
         partial_set_col=cfg.partial_set_col,
     )
@@ -185,12 +181,8 @@ def apply_batch(
             {
                 "batch_id": batch_id,
                 "applied": res.applied,
-                "events_in": res.events_in,
-                "keys_upserted": res.keys_upserted,
-                "keys_deleted": res.keys_deleted,
-                "late_events": res.late_events,
+                **res.counts(),
                 "dead_letter_rows": n_dead,
-                "buckets_rewritten": res.buckets_rewritten,
                 "snapshot_version": res.snapshot_version,
                 **({"warn_nulls": warn_nulls} if warn_nulls else {}),
             },

@@ -2,10 +2,10 @@
 
 Same interface as ParquetLakeTarget, ``merge_batch`` included: it takes
 the batch's raw events and reduces them itself (``lww_reduce``, or
-``lww_reduce_salted`` when salted; ``lww_reduce_partial`` with the emitted
-batch mask for partial images — MERGE forbids multiple source rows per
-key), applies ``transform_reduced`` to the winners, then MERGEs. Used when
-the Iceberg runtime jar + catalog extensions are configured
+``lww_reduce_partial`` with the emitted batch mask for partial images —
+MERGE forbids multiple source rows per key), applies
+``transform_reduced`` to the winners, then MERGEs. Used when the Iceberg
+runtime jar + catalog extensions are configured
 (session.iceberg_confs). The repository ships no Iceberg jar, so the live
 path is covered by a skip-guarded integration test; the SQL the target
 emits is built by pure functions below and plan-level tests pin the exact
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import MERGE_KEYS, TRANSCRIPTS_SCHEMA
-from ..operators.lww import lww_reduce, lww_reduce_partial, lww_reduce_salted
+from ..operators.lww import lww_reduce, lww_reduce_partial
 from ..plans.evolution import IncompatibleSchemaChange, _wider
 from .parquet_lake import MergeResult  # shared result type
 
@@ -249,8 +249,6 @@ class IcebergTarget:
         events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
-        salted: bool = False,
-        salt_buckets: int = 16,
         transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
@@ -280,11 +278,8 @@ class IcebergTarget:
 
         if partial_set_col is not None:
             reduced = lww_reduce_partial(
-                events, set_col=partial_set_col, emit_set_col=partial_set_col,
-                salt_buckets=salt_buckets if salted else None,
+                events, set_col=partial_set_col, emit_set_col=partial_set_col
             )
-        elif salted:
-            reduced = lww_reduce_salted(events, salt_buckets=salt_buckets)
         else:
             reduced = lww_reduce(events)
         if transform_reduced is not None:

@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import LWW_ORDER, MERGE_KEYS, TRANSCRIPTS_SCHEMA
-from ..operators.lww import lww_reduce, lww_reduce_partial, lww_reduce_salted
+from ..operators.lww import lww_reduce, lww_reduce_partial
 
 INTERNAL_COLS = ("_lsn", "_deleted")
 
@@ -92,6 +92,18 @@ class MergeResult:
     buckets_compacted: int = 0
     snapshot_version: int = -1
     extra: dict = field(default_factory=dict)
+
+    def counts(self) -> dict[str, int]:
+        """The batch's six counts, as the manifest ``metrics`` and the
+        apply metrics jsonl both record them."""
+        return {
+            "events_in": self.events_in,
+            "keys_upserted": self.keys_upserted,
+            "keys_deleted": self.keys_deleted,
+            "late_events": self.late_events,
+            "buckets_rewritten": self.buckets_rewritten,
+            "buckets_compacted": self.buckets_compacted,
+        }
 
 
 class ParquetLakeTarget:
@@ -521,8 +533,6 @@ class ParquetLakeTarget:
         events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
-        salted: bool = False,
-        salt_buckets: int = 16,
         transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
@@ -562,10 +572,7 @@ class ParquetLakeTarget:
           cell write resolves against the row's committed version at ROW
           granularity (the lake stores row versions, not per-cell versions —
           the Cassandra alternative would double storage), and such events
-          are flagged in late_events;
-        - ``salted`` composes: the cell reduce's two-phase form pre-reduces
-          per (keys, salt) with the same per-cell struct maxes (associative),
-          so hot-conversation skew is defused without losing cell orders.
+          are flagged in late_events.
         """
         m = self.manifest()
         if stream_id == m.get("stream_id") and batch_id <= m["batch_id"]:
@@ -598,14 +605,8 @@ class ParquetLakeTarget:
         )
         ev_cols = ["op", "lsn", "ts", *MERGE_KEYS, *cell_cols]
         if partial_set_col is None:
-            events = observed.select(*ev_cols)
-            merged = (
-                lww_reduce_salted(
-                    events, keys=MERGE_KEYS, order=LWW_ORDER,
-                    salt_buckets=salt_buckets,
-                )
-                if salted
-                else lww_reduce(events, keys=MERGE_KEYS, order=LWW_ORDER)
+            merged = lww_reduce(
+                observed.select(*ev_cols), keys=MERGE_KEYS, order=LWW_ORDER
             )
         else:
             batch.cache()  # read again for its buckets and keys
@@ -629,7 +630,6 @@ class ParquetLakeTarget:
             merged = lww_reduce_partial(
                 events.unionByName(as_events), keys=MERGE_KEYS, order=LWW_ORDER,
                 set_col=partial_set_col, payload=cell_cols,
-                salt_buckets=salt_buckets if salted else None,
             )
         if transform_reduced is not None:
             # normalize AFTER the reduce: the Python/Arrow stage then sees one
@@ -674,8 +674,9 @@ class ParquetLakeTarget:
             batch_id=batch_id,
             applied=True,
             events_in=events_in,
-            # with raw (unreduced) input these are touched-keys / delete-event
-            # counts; with pre-reduced input they are exact per-key counts
+            # events_in == n_keys: no key carries two events in this batch, so
+            # every event is its key's winner and the counts are exact per
+            # key; otherwise they are touched-keys / delete-event counts
             keys_upserted=n_keys - n_del if events_in == n_keys else n_keys,
             keys_deleted=n_del,
             late_events=int(stats["n_late"] or 0),
@@ -687,14 +688,7 @@ class ParquetLakeTarget:
         m["stream_id"] = stream_id
         m["buckets"] = buckets
         m["watermarks"] = wm
-        m["metrics"] = {
-            "events_in": res.events_in,
-            "keys_upserted": res.keys_upserted,
-            "keys_deleted": res.keys_deleted,
-            "late_events": res.late_events,
-            "buckets_rewritten": res.buckets_rewritten,
-            "buckets_compacted": res.buckets_compacted,
-        }
+        m["metrics"] = res.counts()
         res.snapshot_version = self._commit(m)
         return res
 

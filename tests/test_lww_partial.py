@@ -194,16 +194,3 @@ def test_matches_python_cell_reference_on_random_streams(spark):
 
         got = rows_by_key(lww_state_partial(make(spark, stream)))
         assert got == expected, f"seed {seed}"
-
-        # the salted two-phase form must agree exactly (associative maxes)
-        from kettle_jena_plugins_spark.operators.lww import (
-            lww_reduce_partial,
-        )
-
-        red = lww_reduce_partial(make(spark, stream), salt_buckets=4)
-        got_salted = {
-            (r["conv_id"], r["turn_idx"]):
-                (r["role"], r["text"], r["tool"], r["lsn"])
-            for r in red.filter("op != 'D'").collect()
-        }
-        assert got_salted == expected, f"salted, seed {seed}"

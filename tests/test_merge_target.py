@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kettle_jena_plugins_spark.model import CHANGE_EVENT_SCHEMA, CHANGE_EVENT_SCHEMA_V2
-from kettle_jena_plugins_spark.operators.lww import lww_state
+from kettle_jena_plugins_spark.operators.lww import lww_reduce_partial, lww_state
 from kettle_jena_plugins_spark.streaming.apply import CDCConfig, apply_batch
 from kettle_jena_plugins_spark.targets.parquet_lake import ParquetLakeTarget
 
@@ -291,6 +291,25 @@ def test_cow_and_mor_report_equal_batch_counts(spark, tmp_path):
     assert counts["mor"][2] == (0, 0, 0, 0)
 
 
+def test_metrics_jsonl_records_manifest_counts(spark, tmp_path):
+    """The apply metrics jsonl and the snapshot manifest record the same
+    batch counts, buckets_compacted included."""
+    import json
+
+    t = ParquetLakeTarget(spark, str(tmp_path / "tbl"), n_buckets=2, mode="cow")
+    t.create()
+    path = str(tmp_path / "m.jsonl")
+    cfg = CDCConfig(normalize=False, metrics_path=path)
+    apply_batch(t, make_events(spark, [ev("I", 1, 1, "a", 0, text="x")]), 0, cfg)
+    apply_batch(t, make_events(spark, [ev("U", 2, 2, "a", 0, text="y")]), 1, cfg)
+    with open(path) as f:
+        rec = json.loads(f.read().splitlines()[-1])
+    counts = t.manifest()["metrics"]
+    assert {k: rec.get(k) for k in counts} == counts
+    assert counts["buckets_compacted"] == 1  # cow folds the second layer
+    t.drop()
+
+
 def test_multibatch_equals_oneshot_lww(spark, target):
     """Convergence golden test: incremental apply over batches == one-shot
     lww_state over the concatenated log (SURVEY.md §7 minimum slice)."""
@@ -362,13 +381,16 @@ def test_redact_on_ingest(spark, tmp_path):
         t.drop()
 
 
-def test_lww_combiner_runs_before_exchange(spark):
+@pytest.mark.parametrize("partial", [False, True], ids=["whole_row", "partial"])
+def test_lww_combiner_runs_before_exchange(spark, partial):
     """Pin the load-bearing scale property of the apply plan (BENCH.md's
     projection rests on it): the LWW reduce must run a PARTIAL max_by
     aggregate BELOW the key Exchange (map-side combine), so shuffle volume
     is ~#distinct keys per batch, never #events. executedPlan prints
     top-down, so the partial aggregate must appear AFTER the Exchange in
-    the string and a partial_max must exist at all."""
+    the string and a partial_max must exist at all. Both sink reduces are
+    pinned — whole-row and cell-level (a set_cols mask) — because this
+    combine is the apply path's only hot-key skew defence."""
     events = make_events(
         spark,
         [
@@ -376,9 +398,14 @@ def test_lww_combiner_runs_before_exchange(spark):
             for i in range(1, 60)
         ],
     )
-    plan = (
-        lww_state(events)._jdf.queryExecution().executedPlan().toString()
-    )
+    if partial:
+        mask = F.when(F.col("lsn") % 2 == 0, F.array(F.lit("text"))).otherwise(
+            F.array(F.lit("role"), F.lit("text"))
+        )
+        reduced = lww_reduce_partial(events.withColumn("set_cols", mask))
+    else:
+        reduced = lww_state(events)
+    plan = reduced._jdf.queryExecution().executedPlan().toString()
     assert "partial_max" in plan, plan[:2000]
     i_exchange = plan.index("Exchange hashpartitioning")
     i_partial = plan.index("partial_max")

@@ -151,21 +151,6 @@ def test_set_cols_mask_never_evolves_target_schema(spark, target):
     assert "set_cols" not in [f.name for f in target.schema().fields]
 
 
-def test_partial_rejects_whole_row_sink_composes_with_salted(spark, target):
-    # salted composes: the cell reduce pre-reduces per (keys, salt) with
-    # the same associative struct maxes — hot-key path, same semantics
-    salted_cfg = CDCConfig(normalize=False, partial_set_col="set_cols",
-                           salted=True, salt_buckets=4)
-    apply_batch(target, make(spark, [
-        ev("I", 1, 1, "a", 0, role="user", text="hello", tool="calc",
-           set_cols=("role", "text", "tool")),
-    ]), 0, cfg=salted_cfg)
-    apply_batch(target, make(spark, [
-        ev("U", 2, 2, "a", 0, text="edited", set_cols=("text",)),
-    ]), 1, cfg=salted_cfg)
-    assert state(target) == {("a", 0): ("user", "edited", "calc")}
-
-
 def test_wal2json_sparse_columns_to_cell_merge(spark, target):
     """The real partial-image source: wal2json WITHOUT replica identity
     full omits unchanged/TOASTed columns from the update's column array.

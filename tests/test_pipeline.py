@@ -167,6 +167,28 @@ def test_pipeline_cli_refuses_sparse_envelope_input(spark, tmp_path, capsys):
     assert "sparse row images" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("cmd", ["pipeline_stream", "index_probe"])
+def test_cli_missing_required_option_is_usage_error(tmp_path, capsys, cmd):
+    """`pipeline --stream` without --checkpoint and `index probe` without
+    --docs are usage errors: argparse exit code 2 and a message, not an
+    assert traceback (which `python -O` would skip) or a bare exit."""
+    from kettle_jena_plugins_spark.run import main
+
+    spec_path = tmp_path / "spec.json"
+    spec_path.write_text(
+        json.dumps({"steps": [{"type": "filter", "condition": "op <> 'D'"}]})
+    )
+    argv = {
+        "pipeline_stream": ["pipeline", "--spec", str(spec_path),
+                            "--input", str(tmp_path / "wal"), "--stream"],
+        "index_probe": ["index", "probe", "--index", str(tmp_path / "idx")],
+    }[cmd]
+    with pytest.raises(SystemExit) as exc:
+        main(argv)
+    assert exc.value.code == 2
+    assert "requires --" in capsys.readouterr().err
+
+
 def test_pipeline_json_string_input(spark):
     steps = parse(json.dumps(SPEC), variables={"ns": "http://x"})
     assert steps[1].conf["uri_prefix"] == "http://x/conv/"
