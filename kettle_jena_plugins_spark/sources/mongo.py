@@ -206,8 +206,10 @@ def to_mongo_oplog(
 ) -> DataFrame:
     """Canonical change events → oplog JSON strings (deterministic
     fixture renderer; inverse of ``parse_mongo_oplog`` up to the
-    documented second-granularity ts — the composite (t, i) preserves
-    the ORDER of any lsn < 2³² exactly, recovered by pmod(lsn, 2³²)).
+    documented second-granularity ts). The BSON ordinal ``i`` is the lsn
+    itself, so the composite (t, i) preserves lsn order exactly; an lsn
+    outside the ordinal's unsigned 32-bit range [0, 2³²) fails the query
+    (``raise_error``) rather than wrapping into a reordered ordinal.
 
     If the input carries ``set_col``, updates render as sparse
     ``$set``/``$unset`` patches (null-valued set columns become
@@ -222,7 +224,16 @@ def to_mongo_oplog(
             # exact integer division, as in canal.py: past 2^53 micros
             # a double quotient rounds up to the next second
             F.expr("unix_micros(ts) div 1000000").alias("t"),
-            F.pmod(F.col("lsn"), F.lit(1 << 32)).alias("i"),
+            F.when(
+                F.col("lsn").between(0, (1 << 32) - 1) | F.col("lsn").isNull(),
+                F.col("lsn"),
+            ).otherwise(
+                F.raise_error(F.concat(
+                    F.lit("to_mongo_oplog: lsn outside the BSON ordinal range "
+                          "[0, 2^32): "),
+                    F.col("lsn").cast("string"),
+                ))
+            ).alias("i"),
         ).alias("$timestamp")
     )
     keys_doc = F.struct(*[F.col(k) for k in MERGE_KEYS])

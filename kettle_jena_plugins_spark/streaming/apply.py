@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,32 +30,15 @@ from pyspark.sql.types import StructType
 
 from ..functions.textnorm import normalize_text
 from ..model import CHANGE_EVENT_SCHEMA
-from ..operators.validate import ValidationSpec, validate_split
+from ..operators.validate import validate_split
 from ..plans.evolution import ENVELOPE_COLS, evolved_schema
 
 
 @dataclass
 class CDCConfig:
     normalize: bool = True
-    # ingest-time PII-style scrubbing (operators/text.py:redact_text):
-    # applied with normalize, POST-reduce on LWW winners only — chained
-    # JVM-side regexp_replace, so the per-event path stays Python-free and
-    # redaction cost scales with FINAL rows, not delivered events
-    redact: bool = False
     dead_letter_dir: str | None = None
     metrics_path: str | None = None  # jsonl, one line per batch
-    validation: ValidationSpec = field(default_factory=ValidationSpec)
-    # streaming-only: drop redelivered WAL entries (same lsn) across
-    # micro-batches before foreachBatch, with state bounded by a 10-minute
-    # event-time watermark (streaming/dedup.py). A cost optimization — the
-    # sink's idempotent LWW merge already converges under duplicates.
-    stream_dedup: bool = False
-    # ActionIfNull=WARN accounting for payload columns: nulls in these
-    # columns are counted per batch (one tiny agg pass) and surfaced in the
-    # metrics jsonl + MergeResult.extra — the engine's analogue of the
-    # reference's per-row WARN log (ActionIfNull.java:25-28). Default off:
-    # costs one extra scan of the batch.
-    warn_null_cols: tuple[str, ...] = ()
     # the batch's events carry PARTIAL row images: the named array column
     # lists the payload columns each event wrote (wal2json column arrays,
     # Mongo $set patches). Routes the sink through its cell-level merge
@@ -88,18 +71,14 @@ def apply_batch(
     # would then run nearly serial. Repartition to 2×defaultParallelism
     # when the scan is coarser than that.
     target_p = events.sparkSession.sparkContext.defaultParallelism * 2
-    try:
-        # JVM-side partition probe: df.rdd would build the full
-        # Python-conversion RDD (serializer plan + pickling setup)
-        # just to read a count — measurable at high batch rates
-        n_parts = events._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:  # pragma: no cover - internal-API fallback
-        n_parts = events.rdd.getNumPartitions()
+    # JVM-side partition probe: df.rdd would build the full Python-conversion
+    # RDD (serializer plan + pickling setup) just to read a count
+    n_parts = events._jdf.queryExecution().toRdd().getNumPartitions()
     if n_parts < target_p:
         events = events.repartition(target_p)
 
     # 1. validation split (SHACL analogue): bad rows → dead letter
-    ok, dead = validate_split(events, cfg.validation)
+    ok, dead = validate_split(events)
     n_dead = 0
     if cfg.dead_letter_dir is not None:
         dead = dead.cache()
@@ -118,13 +97,7 @@ def apply_batch(
     def _normalize(df: DataFrame) -> DataFrame:
         if "text" not in df.columns:
             return df
-        if cfg.normalize:
-            df = df.withColumn("text", normalize_text(F.col("text")))
-        if cfg.redact:
-            from ..operators.text import redact_text
-
-            df = df.withColumn("text", redact_text(F.col("text")))
-        return df
+        return df.withColumn("text", normalize_text(F.col("text")))
 
     # 3. schema evolution: ALTER before the merge plan is analyzed
     tgt_schema = target.schema()
@@ -150,30 +123,15 @@ def apply_batch(
         cols.append(F.col(cfg.partial_set_col))
     ok = ok.select(*cols)
 
-    # 3.4 WARN-null accounting (see CDCConfig.warn_null_cols)
-    warn_nulls: dict[str, int] = {}
-    if cfg.warn_null_cols:
-        aggs = [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c)
-            for c in cfg.warn_null_cols
-            if c in ok.columns
-        ]
-        if aggs:
-            warn_nulls = {
-                k: int(v or 0) for k, v in ok.agg(*aggs).first().asDict().items()
-            }
-
     # 4. idempotent MERGE commit: the sink LWW-reduces the raw events
     #    (cell-level for partial images; hot keys are absorbed by the
     #    reduce's map-side partial aggregate) and normalizes the winners only
     res = target.merge_batch(
         ok, batch_id, stream_id=stream_id,
-        transform_reduced=_normalize if (cfg.normalize or cfg.redact) else None,
+        transform_reduced=_normalize if cfg.normalize else None,
         partial_set_col=cfg.partial_set_col,
     )
     res.extra["dead_letter_rows"] = n_dead
-    if warn_nulls:
-        res.extra["warn_nulls"] = warn_nulls
 
     if cfg.metrics_path:
         _append_metrics(
@@ -184,7 +142,6 @@ def apply_batch(
                 **res.counts(),
                 "dead_letter_rows": n_dead,
                 "snapshot_version": res.snapshot_version,
-                **({"warn_nulls": warn_nulls} if warn_nulls else {}),
             },
         )
     return res
@@ -237,10 +194,6 @@ def run_stream(
         stream = parse(reader.text(events_dir))
     else:
         stream = reader.schema(schema).parquet(events_dir)
-    if cfg.stream_dedup:
-        from .dedup import watermarked_dedup
-
-        stream = watermarked_dedup(stream)
 
     stream_id = os.path.abspath(checkpoint_dir)  # one lineage per checkpoint
 

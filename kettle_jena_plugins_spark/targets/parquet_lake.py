@@ -27,7 +27,9 @@ Write modes — one merge path; the mode only sets the compaction threshold.
 Every merge appends a batch-local LWW-reduced DELTA layer to the affected
 buckets (write cost O(batch), independent of table size), compacts each
 bucket whose layer stack then exceeds the threshold, and commits once;
-reads resolve LWW across layers.
+reads resolve LWW across layers. The batch's counts and per-bucket LSN
+watermarks are observed on its own delta write, so no written file is
+re-opened.
     cow — threshold 1: every touched bucket that had a prior layer is
           compacted back to one base layer in the same commit
           (read-optimal, write-amplified).
@@ -52,10 +54,8 @@ import json
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,20 +64,6 @@ from ..model import LWW_ORDER, MERGE_KEYS, TRANSCRIPTS_SCHEMA
 from ..operators.lww import lww_reduce, lww_reduce_partial
 
 INTERNAL_COLS = ("_lsn", "_deleted")
-
-
-def _footer_rows_max_lsn(path: str) -> tuple[int, int]:
-    """(row count, max _lsn) of one written parquet file, from its footer."""
-    md = pq.ParquetFile(path).metadata
-    col_idx = next(
-        i for i in range(md.num_columns) if md.schema.column(i).name == "_lsn"
-    )
-    mx = -1
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(col_idx).statistics
-        if st is not None and st.max is not None:
-            mx = max(mx, int(st.max))
-    return md.num_rows, mx
 
 
 @dataclass
@@ -485,12 +471,25 @@ class ParquetLakeTarget:
 
     # ---------------------------------------------------------------- write
 
-    def _write_file_group(self, data: DataFrame) -> dict[str, list[str]]:
-        """Write one file group partitioned by bucket → {bucket: [files]}."""
+    def _write_file_group(
+        self, data: DataFrame, obs: Observation | None = None
+    ) -> dict[str, list[str]]:
+        """Write one file group partitioned by bucket → {bucket: [files]}.
+        ``obs`` observes the written rows: ``rows`` (their count) and, per
+        bucket ``b``, ``str(b)`` (its max ``_lsn``, null if none written)."""
         out_dir = os.path.join(self.root, f"data/v{uuid.uuid4().hex[:12]}")
+        data = data.withColumn("_bucket", self._bucket_col())
+        if obs is not None:
+            data = data.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                *[
+                    F.max(F.when(F.col("_bucket") == b, F.col("_lsn"))).alias(str(b))
+                    for b in range(self.n_buckets)
+                ],
+            )
         (
-            data.withColumn("_bucket", self._bucket_col())
-            .repartition(F.col("_bucket"))
+            data.repartition(F.col("_bucket"))
             .sortWithinPartitions(*MERGE_KEYS)
             .write.partitionBy("_bucket")
             .parquet(out_dir)
@@ -549,11 +548,11 @@ class ParquetLakeTarget:
         touched buckets; every bucket whose layer stack then exceeds the
         mode's threshold (1 for cow, compact_threshold for mor) is
         compacted, and the whole result lands in ONE snapshot commit.
-        Batch metrics (events, delete events, late events) ride the delta
-        write via DataFrame.observe; per-bucket LSN watermarks and
-        touched-key counts come from the delta files' parquet footers. A
-        whole-row batch that compacts nothing is therefore one Spark action
-        with no target read.
+        Batch metrics ride the delta write via DataFrame.observe: events,
+        delete events and late events on the raw batch; touched keys (the
+        written row count) and each bucket's LSN watermark (its max written
+        ``_lsn``) on the written rows. A whole-row batch that compacts
+        nothing is therefore one Spark action with no target read.
 
         ``partial_set_col``: the batch's events carry PARTIAL row images —
         the named array column lists the payload columns each event wrote
@@ -637,25 +636,20 @@ class ParquetLakeTarget:
             # Ordering is safe — LWW winner selection uses (ts, lsn, op), not
             # the payload, and the transform is idempotent.
             merged = transform_reduced(merged)
+        write_obs = Observation(f"cdc-write-{batch_id}")
         files_by_bucket = self._write_file_group(
             merged.select(
                 *[F.col(f.name) for f in cur_schema.fields],
                 F.col("lsn").alias("_lsn"),
                 (F.col("op") == "D").alias("_deleted"),
-            )
+            ),
+            write_obs,
         )
         batch.unpersist()  # a no-op unless the partial branch cached it
-        stats = obs.get
-
-        # per-bucket watermark (max _lsn) + touched keys from parquet footers
-        # (footers read concurrently — this loop is driver-side serial cost
-        # that otherwise caps scaling efficiency at high parallelism)
-        written = [(b, f) for b, fs in files_by_bucket.items() for f in fs]
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            footers = list(pool.map(_footer_rows_max_lsn, [f for _, f in written]))
-        n_keys = sum(nr for nr, _ in footers)
-        for (b, _), (_, mx) in zip(written, footers):
-            wm[b] = max(wm.get(b, -1), mx)
+        stats, written = obs.get, write_obs.get
+        n_keys = written["rows"]
+        for b in files_by_bucket:
+            wm[b] = max(wm.get(b, -1), written[b] if written[b] is not None else -1)
 
         buckets = dict(m["buckets"])
         for b, fs in files_by_bucket.items():

@@ -908,6 +908,41 @@ def test_mongo_oplog_seconds_exact_past_2_53_micros(spark):
     assert _json.loads(env)["ts"]["$timestamp"] == {"t": 10413792000, "i": 7}
 
 
+def test_mongo_oplog_refuses_lsn_outside_ordinal_range(spark):
+    """The BSON ordinal is an unsigned 32-bit int: an lsn of 2^32 fails the
+    render instead of wrapping to i=0, which would sort it before a
+    same-second lsn 2^32-1. In-range lsns still round-trip unchanged."""
+    import json as _json
+
+    import pytest as _pytest
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from kettle_jena_plugins_spark.sources.mongo import (
+        parse_mongo_oplog,
+        to_mongo_oplog,
+    )
+
+    top = (1 << 32) - 1
+    ok = _changes(spark, [
+        ("I", 0, _ts(1), "c1", 0, "user", "lo", None),
+        ("U", top, _ts(1), "c1", 0, "user", "hi", None),
+    ])
+    rendered = to_mongo_oplog(ok)
+    ords = sorted(
+        _json.loads(r["value"])["ts"]["$timestamp"]["i"]
+        for r in rendered.collect()
+    )
+    assert ords == [0, top]
+    back = parse_mongo_oplog(rendered).orderBy("lsn").collect()
+    assert [r["lsn"] % (1 << 32) for r in back] == [0, top]
+    assert [r["text"] for r in back] == ["lo", "hi"]
+
+    for lsn in (1 << 32, -1):
+        bad = _changes(spark, [("U", lsn, _ts(1), "c1", 0, "user", "x", None)])
+        with _pytest.raises(SparkRuntimeException, match="BSON ordinal"):
+            to_mongo_oplog(bad).collect()
+
+
 def test_mongo_ingest_forces_cell_merge(spark, tmp_path, capsys):
     """CLI ingest --dialect mongo auto-enables the cell-level merge (the
     oplog is inherently sparse — whole-row LWW would null untouched

@@ -94,32 +94,6 @@ def test_remove_sources_with_fields(spark):
     assert set(out.columns) == {"keep", "m"}
 
 
-def test_warn_null_cols_in_batch_metrics(spark, tmp_path):
-    """CDCConfig.warn_null_cols surfaces per-column null counts in the
-    batch metrics jsonl (ActionIfNull=WARN accounting for payloads)."""
-    import json
-
-    from kettle_jena_plugins_spark.datagen import gen_change_events
-    from kettle_jena_plugins_spark.streaming.apply import CDCConfig, apply_batch
-    from kettle_jena_plugins_spark.targets.parquet_lake import ParquetLakeTarget
-
-    ev = gen_change_events(spark, 2000, n_convs=50)
-    tgt = ParquetLakeTarget(spark, str(tmp_path / "tbl"), n_buckets=4)
-    tgt.create()
-    metrics = str(tmp_path / "metrics.jsonl")
-    cfg = CDCConfig(
-        metrics_path=metrics, warn_null_cols=("tool", "text")
-    )
-    res = apply_batch(tgt, ev, 0, cfg)
-    expected = {
-        c: ev.filter(f"{c} IS NULL").count() for c in ("tool", "text")
-    }
-    assert expected["tool"] > 0  # datagen produces null tools
-    assert res.extra["warn_nulls"] == expected
-    rec = json.loads(open(metrics).read().splitlines()[-1])
-    assert rec["warn_nulls"] == expected
-
-
 def test_null_value_error_fires_on_non_first_column(spark):
     """ERROR must fire even when coalesce short-circuits at an earlier
     non-null column (the reference throws for ANY ERROR-null column)."""

@@ -291,6 +291,67 @@ def test_cow_and_mor_report_equal_batch_counts(spark, tmp_path):
     assert counts["mor"][2] == (0, 0, 0, 0)
 
 
+def test_watermarks_are_max_written_lsn_per_bucket(spark, tmp_path):
+    """After every batch, each bucket's watermark is the max _lsn over the
+    rows written to it (all layers, unresolved) — not the max batch lsn —
+    and the key counts match the new layer's row count. Covers a loser
+    with a higher lsn than its key's winner, a delete, a partial-image
+    batch and an empty batch."""
+    from pyspark.sql import types as T
+
+    t = ParquetLakeTarget(
+        spark, str(tmp_path / "tbl"), n_buckets=4, mode="mor",
+        compact_threshold=100,
+    )
+    t.create()
+    partial_schema = T.StructType(
+        [*CHANGE_EVENT_SCHEMA.fields,
+         T.StructField("set_cols", T.ArrayType(T.StringType()))]
+    )
+    whole = CDCConfig(normalize=False)
+    batches = [
+        (make_events(spark, [
+            ev("I", 1, 1, "a", 0, text="x"),
+            ev("U", 9, 0, "a", 0, text="older-ts"),  # loses on ts
+            ev("I", 2, 2, "b", 0),
+            ev("I", 3, 3, "c", 1),
+            ev("I", 4, 4, "d", 2),
+        ]), whole),
+        (make_events(spark, [ev("D", 5, 5, "b", 0)]), whole),
+        (make_events(spark, [
+            (*ev("U", 6, 6, "a", 0, text="cell"), ["text"]),
+            (*ev("U", 7, 7, "e", 0, role="bot"), ["role"]),
+        ], partial_schema), CDCConfig(normalize=False, partial_set_col="set_cols")),
+        (make_events(spark, []), whole),
+    ]
+
+    def layer_files(m):
+        return {
+            f for e in m["buckets"].values() for layer in e["layers"]
+            for f in layer["files"]
+        }
+
+    for i, (batch, cfg) in enumerate(batches):
+        before = layer_files(t.manifest())
+        res = apply_batch(t, batch, i, cfg)
+        new_files = sorted(layer_files(t.manifest()) - before)
+        rows = spark.read.parquet(*new_files).count() if new_files else 0
+        want = {
+            str(r["b"]): r["mx"]
+            for r in t.read_internal(resolve=False)
+            .groupBy(t._bucket_col().alias("b"))
+            .agg(F.max("_lsn").alias("mx"))
+            .collect()
+        }
+        assert t.watermarks() == want, i
+        if res.events_in == rows:
+            assert res.keys_upserted + res.keys_deleted == rows, i
+        else:
+            assert res.keys_upserted == rows, i
+    assert max(t.watermarks().values()) == 7  # lsn 9 lost, never written
+    t.drop()
+
+
 def test_metrics_jsonl_records_manifest_counts(spark, tmp_path):
     """The apply metrics jsonl and the snapshot manifest record the same
     batch counts, buckets_compacted included."""
@@ -359,26 +420,6 @@ def test_normalize_post_reduce_applies_to_winners(spark, target):
         (r["conv_id"], r["turn_idx"]): r["text"] for r in target.read().collect()
     }
     assert state[("c1", 0)] == "newer value"
-
-
-def test_redact_on_ingest(spark, tmp_path):
-    # cfg.redact scrubs PII post-reduce on LWW winners — both merge paths
-    t = ParquetLakeTarget(spark, str(tmp_path / "rtbl"), n_buckets=2, mode="mor")
-    t.create()
-    try:
-        b = make_events(spark, [
-            ev("I", 1, 1, "a", 0, text="mail me at bob@example.com ok"),
-            ev("I", 2, 2, "a", 1, text="from 10.0.0.7 with love"),
-            ev("U", 3, 3, "a", 0, text="final bob@example.com text"),
-        ])
-        apply_batch(t, b, 0, CDCConfig(redact=True, normalize=False))
-        s = state(t)
-        assert s[("a", 0)][1] == "final <EMAIL> text"  # LWW winner, redacted
-        assert s[("a", 1)][1] == "from <IP> with love"
-        raw = " ".join(v[1] for v in s.values())
-        assert "bob@example.com" not in raw and "10.0.0.7" not in raw
-    finally:
-        t.drop()
 
 
 @pytest.mark.parametrize("partial", [False, True], ids=["whole_row", "partial"])

@@ -140,44 +140,5 @@ def test_windowed_op_counts_drops_late(spark, tmp_path):
     assert all(ws < T0 + 3 * m for ws, _ in finalized)
 
 
-def test_stream_dedup_in_apply_pipeline(spark, tmp_path):
-    """run_stream(stream_dedup=True) converges to the same table state as the
-    raw pipeline while feeding fewer events to the sink."""
-    from kettle_jena_plugins_spark.sources.changes import change_events
-    from kettle_jena_plugins_spark.streaming.apply import CDCConfig, run_stream
-    from kettle_jena_plugins_spark.targets.parquet_lake import ParquetLakeTarget
-
-    ch = change_events(spark, "/root/testdata/sf0.001")
-    dup = ch.unionByName(ch.limit(300))  # redelivered entries
-    wal = str(tmp_path / "wal")
-    dup.coalesce(2).write.parquet(wal)
-
-    states = []
-    events_in = []
-    for flag in (False, True):
-        tbl = str(tmp_path / f"tbl{int(flag)}")
-        mpath = str(tmp_path / f"m{int(flag)}.jsonl")
-        tgt = ParquetLakeTarget(spark, tbl, n_buckets=4)
-        tgt.create()
-        run_stream(
-            spark,
-            wal,
-            tgt,
-            str(tmp_path / f"ckpt{int(flag)}"),
-            CDCConfig(
-                normalize=False, stream_dedup=flag, metrics_path=mpath
-            ),
-        )
-        states.append(sorted(tuple(r) for r in tgt.read().collect()))
-        import json as _json
-
-        with open(mpath) as f:
-            events_in.append(
-                sum(_json.loads(line)["events_in"] for line in f)
-            )
-    assert states[0] == states[1]
-    assert events_in[1] < events_in[0]
-
-
 if __name__ == "__main__":
     pytest.main([__file__, "-x", "-q"])
