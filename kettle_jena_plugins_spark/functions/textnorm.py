@@ -1,4 +1,4 @@
-"""Vectorized text normalization (Arrow/pandas UDFs — no per-row Python).
+"""Text normalization as one JVM expression (no Python worker).
 
 Reference analogue: the per-row value conversion + UTF-8 decode inside the
 Create-Jena-Model step (convertSqlValueToRdf, JenaModelStep.java:439-533) —
@@ -9,40 +9,35 @@ version-pinned functions of their input only.
 
 from __future__ import annotations
 
+import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+# C0 controls and DEL, except \t \n \r (whitespace, collapsed below);
+# the same pattern in Python's re and Java's regex
+CONTROL_CHARS = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
 
 
-# explicit DataType (not a DDL string): keeps module importable without an
-# active SparkSession
-@pandas_udf(T.StringType())
-def normalize_text(s: pd.Series) -> pd.Series:
-    """NFC-normalize, strip control chars, collapse whitespace runs, trim.
-
-    Pure & deterministic (unicodedata is version-pinned by the Python
-    runtime shipped with the job).
-    """
-    import re
-
-    ws = re.compile(r"\s+")
-    ctl = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
-
-    def norm(v):
-        if v is None:
-            return None
-        v = unicodedata.normalize("NFC", v)
-        v = ctl.sub("", v)
-        return ws.sub(" ", v).strip()
-
-    return s.map(norm)
+def normalize_text(col: Column) -> Column:
+    """NFC-normalize (ICU's Normalizer, shipped with Spark), strip control
+    chars, collapse Unicode whitespace runs, trim. Equals
+    ``normalize_text_ref`` on the code points Python's Unicode assigns."""
+    nfc = F.when(  # reflect raises an NPE on a null argument
+        col.isNotNull(),
+        F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), col,
+                  F.lit(False)),
+    )
+    return F.trim(
+        F.regexp_replace(F.regexp_replace(nfc, CONTROL_CHARS, ""), r"(?U)\s+", " ")
+    )
 
 
-def normalize_text_builtin(col: Column) -> Column:
-    """JVM-side fallback covering the whitespace/trim part only (no NFC):
-    used when a query needs an exact SQL oracle (DuckDB lacks NFC)."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
+def normalize_text_ref(v: str | None) -> str | None:
+    """The specification ``normalize_text`` is tested against: pure Python,
+    pinned by ``unicodedata.unidata_version``."""
+    if v is None:
+        return None
+    v = re.sub(CONTROL_CHARS, "", unicodedata.normalize("NFC", v))
+    return re.sub(r"\s+", " ", v).strip()

@@ -131,7 +131,8 @@ def parse_mongo_oplog(
     through the cell-level merge, never whole-row LWW).
 
     - op: i → I, u → U, d → D; n/c/unknown → null op (dead letter).
-    - lsn: the BSON-Timestamp composite t·2³² + i (oplog total order).
+    - lsn: the BSON-Timestamp composite t·2³² + i (oplog total order);
+      an entry whose lsn would overflow a long → null op (dead letter).
     - ts: second-granularity (the lsn tiebreak carries intra-second
       order — the documented coarsening contract).
     - row image: ``o`` for i/d; for u, ``$set`` values with ``$unset``
@@ -154,8 +155,13 @@ def parse_mongo_oplog(
     op_col: Column = F.lit(None).cast("string")
     for k, v in _OP_IN.items():
         op_col = F.when(p["op"] == k, F.lit(v)).otherwise(op_col)
-    tsf = p["ts"]["$timestamp"]
-    lsn = tsf["t"] * F.lit(1 << 32) + tsf["i"]
+    t, i = p["ts"]["$timestamp"]["t"], p["ts"]["$timestamp"]["i"]
+    # t·2³² + i fits a signed long only for t in [0, 2³¹) (t ≥ 2³¹ is after
+    # 2038) and i in [0, 2³²): any other entry gets a null op (dead letter),
+    # and the guards keep ANSI overflow from failing the whole batch
+    fits = t.between(0, (1 << 31) - 1) & i.between(0, (1 << 32) - 1)
+    op_col = F.when(~fits, F.lit(None).cast("string")).otherwise(op_col)
+    lsn = F.when(fits, t * F.lit(1 << 32) + i)
     sets, unsets = p["o"]["$set"], p["o"]["$unset"]
     # a u-record with neither operator is a full replacement document
     is_patch = (p["op"] == "u") & (sets.isNotNull() | unsets.isNotNull())
@@ -190,7 +196,7 @@ def parse_mongo_oplog(
     return out.select(
         op_col.alias("op"),
         lsn.alias("lsn"),
-        F.timestamp_seconds(tsf["t"]).alias("ts"),
+        F.timestamp_seconds(F.when(t.between(0, (1 << 32) - 1), t)).alias("ts"),
         *key_cols,
         *[cell(f) for f in cells],
         mask.alias(set_cols_col),

@@ -1,4 +1,4 @@
-"""The CDC apply pipeline: validate → normalize → evolve → LWW-reduce → MERGE.
+"""The CDC apply pipeline: validate → evolve → normalize → LWW-reduce → MERGE.
 
 Batch core (`apply_batch`) + Structured Streaming wrapper (`run_stream`,
 readStream → foreachBatch → checkpoint). This is the engine's equivalent of
@@ -7,9 +7,10 @@ serialize, EndToEndIT.java:60-92), re-expressed as one micro-batch function.
 
 Every sink takes the batch's raw events and reduces them itself
 (``merge_batch``: whole-row ``lww_reduce``, or the cell-level
-``lww_reduce_partial`` when ``partial_set_col`` is set), then
-applies ``transform_reduced`` to the winners — so there is one
-``merge_batch`` call for every target. Envelope input is parsed by
+``lww_reduce_partial`` when ``partial_set_col`` is set), so there is one
+``merge_batch`` call for every target. Text normalization is a JVM
+expression in the batch's schema projection: no stage of the apply path
+runs Python. Envelope input is parsed by
 ``parse_envelope``, which alone decides whether a dialect may or must carry
 the set-columns mask.
 
@@ -20,6 +21,7 @@ converges to byte-identical state (tests/test_stream_resume.py).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from dataclasses import dataclass
@@ -37,7 +39,7 @@ from ..plans.evolution import ENVELOPE_COLS, evolved_schema
 @dataclass
 class CDCConfig:
     normalize: bool = True
-    dead_letter_dir: str | None = None
+    dead_letter_dir: str | None = None  # stream=s<sha1>/batch=<id> dirs
     metrics_path: str | None = None  # jsonl, one line per batch
     # the batch's events carry PARTIAL row images: the named array column
     # lists the payload columns each event wrote (wal2json column arrays,
@@ -84,22 +86,16 @@ def apply_batch(
         dead = dead.cache()
         n_dead = dead.count()
         if n_dead:
-            dead.write.mode("append").parquet(cfg.dead_letter_dir)
+            # one directory per (lineage, batch), overwritten: a replayed
+            # batch rewrites its dead letters instead of appending them
+            # again. The "s" prefix keeps the inferred partition a string.
+            lineage = hashlib.sha1(stream_id.encode()).hexdigest()[:12]
+            dead.write.mode("overwrite").parquet(
+                f"{cfg.dead_letter_dir}/stream=s{lineage}/batch={batch_id}"
+            )
         dead.unpersist()
 
-    # 2. vectorized normalization of the text payload (pure pandas UDF).
-    # Applied AFTER the LWW reduce (winners only — ~u× fewer rows through
-    # the Python/Arrow stage at u updates/key; measured: normalizing raw
-    # events made the pipeline anti-scale at high core counts because JVM
-    # task threads + Python workers oversubscribe the host). Winner
-    # selection never reads the payload, and normalize is idempotent, so
-    # reduce-then-normalize ≡ normalize-then-reduce.
-    def _normalize(df: DataFrame) -> DataFrame:
-        if "text" not in df.columns:
-            return df
-        return df.withColumn("text", normalize_text(F.col("text")))
-
-    # 3. schema evolution: ALTER before the merge plan is analyzed
+    # 2. schema evolution: ALTER before the merge plan is analyzed
     tgt_schema = target.schema()
     # the set-columns mask is envelope metadata, not payload — it must
     # never be ALTERed into the target
@@ -111,11 +107,19 @@ def apply_batch(
         target.evolve_schema(new_schema)
         tgt_schema = new_schema
     # align batch to the (possibly evolved) target payload set: missing
-    # payload columns → null (late producers), key/ts casts to target types
+    # payload columns → null (late producers), key/ts casts to target types.
+    # Text is normalized here, BEFORE the sink's reduce: normalize is
+    # idempotent and winners are ordered by (ts, lsn, op), so the winners
+    # are those of a raw-payload reduce, except among events tied exactly
+    # on (ts, lsn, op) (a malformed log): their tie is broken on the
+    # normalized payloads.
     cols = [F.col(c) for c in ENVELOPE_COLS]
     for f in tgt_schema.fields:
         if f.name in ok.columns:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            c = F.col(f.name).cast(f.dataType)
+            if cfg.normalize and f.name == "text":
+                c = normalize_text(c)
+            cols.append(c.alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     if cfg.partial_set_col is not None:
@@ -123,13 +127,11 @@ def apply_batch(
         cols.append(F.col(cfg.partial_set_col))
     ok = ok.select(*cols)
 
-    # 4. idempotent MERGE commit: the sink LWW-reduces the raw events
+    # 3. idempotent MERGE commit: the sink LWW-reduces the raw events
     #    (cell-level for partial images; hot keys are absorbed by the
-    #    reduce's map-side partial aggregate) and normalizes the winners only
+    #    reduce's map-side partial aggregate)
     res = target.merge_batch(
-        ok, batch_id, stream_id=stream_id,
-        transform_reduced=_normalize if cfg.normalize else None,
-        partial_set_col=cfg.partial_set_col,
+        ok, batch_id, stream_id=stream_id, partial_set_col=cfg.partial_set_col
     )
     res.extra["dead_letter_rows"] = n_dead
 

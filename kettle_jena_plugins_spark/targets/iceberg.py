@@ -3,9 +3,8 @@
 Same interface as ParquetLakeTarget, ``merge_batch`` included: it takes
 the batch's raw events and reduces them itself (``lww_reduce``, or
 ``lww_reduce_partial`` with the emitted batch mask for partial images —
-MERGE forbids multiple source rows per key), applies
-``transform_reduced`` to the winners, then MERGEs. Used when the Iceberg
-runtime jar + catalog extensions are configured
+MERGE forbids multiple source rows per key), then MERGEs. Used when the
+Iceberg runtime jar + catalog extensions are configured
 (session.iceberg_confs). The repository ships no Iceberg jar, so the live
 path is covered by a skip-guarded integration test; the SQL the target
 emits is built by pure functions below and plan-level tests pin the exact
@@ -249,12 +248,11 @@ class IcebergTarget:
         events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
-        transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
         """One micro-batch of raw change events → LWW-reduced to one row
-        per key → ``transform_reduced`` → MERGE INTO keyed on (conv_id,
-        turn_idx), LWW-guarded on (ts, lsn) so late replays are no-ops.
+        per key → MERGE INTO keyed on (conv_id, turn_idx), LWW-guarded on
+        (ts, lsn) so late replays are no-ops.
 
         Commit sequence (plan-level-pinned): idempotence gate (stream lineage
         + batch-id) → MERGE → watermark + batch-id properties commit.
@@ -282,8 +280,6 @@ class IcebergTarget:
             )
         else:
             reduced = lww_reduce(events)
-        if transform_reduced is not None:
-            reduced = transform_reduced(reduced)
         payload = [
             c
             for c in reduced.columns

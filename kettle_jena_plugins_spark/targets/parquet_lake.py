@@ -532,7 +532,6 @@ class ParquetLakeTarget:
         events: DataFrame,
         batch_id: int,
         stream_id: str = "default",
-        transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
         """Apply one micro-batch of raw change events.
@@ -630,12 +629,6 @@ class ParquetLakeTarget:
                 events.unionByName(as_events), keys=MERGE_KEYS, order=LWW_ORDER,
                 set_col=partial_set_col, payload=cell_cols,
             )
-        if transform_reduced is not None:
-            # normalize AFTER the reduce: the Python/Arrow stage then sees one
-            # row per key, not per event (~10x less at update-heavy batches).
-            # Ordering is safe — LWW winner selection uses (ts, lsn, op), not
-            # the payload, and the transform is idempotent.
-            merged = transform_reduced(merged)
         write_obs = Observation(f"cdc-write-{batch_id}")
         files_by_bucket = self._write_file_group(
             merged.select(

@@ -893,6 +893,33 @@ def test_mongo_oplog_patch_semantics_and_filters(spark):
     assert (repl["role"], repl["text"], repl["tool"]) == ("bot", "replaced", None)
 
 
+def test_mongo_oplog_lsn_overflow_is_a_dead_letter_not_a_failed_batch(spark):
+    """t·2³² + i overflows a long for t ≥ 2³¹ (after 2038) or i ≥ 2³²:
+    such an entry parses to a null op (the dead-letter route) instead of
+    raising ARITHMETIC_OVERFLOW for the whole batch; the last in-range
+    second keeps its exact lsn and ts."""
+    from kettle_jena_plugins_spark.sources.mongo import parse_mongo_oplog
+
+    def entry(t, i, conv):
+        return ('{"ts":{"$timestamp":{"t":%d,"i":%d}},"op":"i",'
+                '"ns":"app.transcripts","o":{"conv_id":"%s","turn_idx":0}}'
+                % (t, i, conv))
+
+    top = (1 << 31) - 1
+    raw = spark.createDataFrame(
+        [(entry(top, 7, "ok"),), (entry(1 << 31, 1, "late_t"),),
+         (entry(1, 1 << 32, "big_i"),),
+         # far outside uint32: its ts would overflow timestamp_seconds too
+         (entry(10**13, 1, "huge_t"),)],
+        "value string",
+    )
+    out = {r["conv_id"]: r for r in parse_mongo_oplog(raw).collect()}
+    assert out["ok"]["op"] == "I"
+    assert out["ok"]["lsn"] == top * (1 << 32) + 7
+    assert out["ok"]["ts"] == datetime.datetime(2038, 1, 19, 3, 14, 7)
+    assert [out[c]["op"] for c in ("late_t", "big_i", "huge_t")] == [None] * 3
+
+
 def test_mongo_oplog_seconds_exact_past_2_53_micros(spark):
     """The rendered oplog ``t`` is the event's unix second by exact
     integer division: at 2300-01-01T00:00:00.999999Z the unix micros

@@ -145,6 +145,25 @@ def test_dead_letter_split(spark, target, tmp_path):
     assert msgs == {"bad_op", "null_key:conv_id"}
 
 
+def test_replayed_batch_writes_its_dead_letters_once(spark, target, tmp_path):
+    """Dead letters are written before the sink's replay gate, so they
+    must be idempotent on their own: a batch_id applied twice leaves its
+    3 dead letters once, and a later batch adds its own beside them."""
+    dl = str(tmp_path / "dead")
+    cfg = CDCConfig(dead_letter_dir=dl, normalize=False)
+    rows = [ev("I", 1, 1, "a", 0, text="ok")] + [
+        ("X", 2 + k, T0, "a", 1 + k, "user", "badop", None) for k in range(3)
+    ]
+    first = apply_batch(target, make_events(spark, rows), 0, cfg)
+    replay = apply_batch(target, make_events(spark, rows), 0, cfg)
+    assert (first.applied, replay.applied) == (True, False)
+    assert spark.read.parquet(dl).count() == 3
+    apply_batch(target, make_events(spark, rows[1:2]), 1, cfg)
+    dead = spark.read.parquet(dl)
+    assert sorted(r["batch"] for r in dead.collect()) == [0, 0, 0, 1]
+    assert {r["stream"][0] for r in dead.collect()} == {"s"}
+
+
 def test_schema_evolution_add_column_and_widen(spark, target):
     apply_batch(target, make_events(spark, [ev("I", 1, 1, "a", 0, text="v1")]), 0)
     v2 = spark.createDataFrame(
@@ -195,8 +214,8 @@ def test_mor_compaction_preserves_state(spark, tmp_path):
 
 def test_mor_whole_row_merge_below_threshold_is_one_job(spark, tmp_path, spark_jobs):
     """The whole-row merge's only Spark action is the delta write: batch
-    counts ride it via observe and watermarks come from parquet footers —
-    no stats job, no target read, no cache."""
+    counts and per-bucket watermarks ride it via observe — no stats job,
+    no footer read, no target read, no cache."""
     t = ParquetLakeTarget(
         spark, str(tmp_path / "mor"), n_buckets=2, mode="mor", compact_threshold=3
     )
@@ -396,7 +415,8 @@ def test_normalize_post_reduce_applies_to_winners(spark, target):
     """normalize=True: final table text is normalized (collapsed whitespace,
     trimmed) in both modes (COW compacts the delta layer in the same
     commit, MOR keeps it), and LWW winner selection is unaffected by messy
-    payloads."""
+    payloads. Normalization runs in apply_batch's projection, before the
+    reduce, and the winners land normalized."""
     rows = [
         ev("I", 1, 0, "c1", 0, text="  hello \t world "),
         ev("U", 2, 10, "c1", 0, text=" final   text "),  # winner
