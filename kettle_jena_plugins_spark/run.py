@@ -3,7 +3,8 @@
 
 Commands:
   gen-wal  --out DIR --n-events N [--segments K] [knobs]   write a WAL dir
-  create   --table DIR                                     create the target
+  create   --table DIR [--n-buckets N] [--mode cow|mor]    create the target;
+           the only command that chooses a layout (the manifest records it)
   stream   --wal DIR --table DIR --checkpoint DIR          tail WAL → MERGE
            (with --dialect D: tail raw JSON-lines envelopes instead —
            checkpoint/resume semantics identical)
@@ -112,15 +113,11 @@ def main(argv: list[str] | None = None) -> int:
                    "automatic for mongo): the wire's column list becomes "
                    "the set-columns mask and each micro-batch takes the "
                    "cell-level merge")
-    s.add_argument("--mode", choices=("cow", "mor", "auto"), default="auto",
-                   help="auto = the mode recorded in the table's manifest")
 
     a = sub.add_parser("apply")
     a.add_argument("--events", required=True)
     a.add_argument("--table", required=True)
     a.add_argument("--batch-id", type=int, required=True)
-    a.add_argument("--mode", choices=("cow", "mor", "auto"), default="auto",
-                   help="auto = the mode recorded in the table's manifest")
 
     ing = sub.add_parser("ingest")
     ing.add_argument("--envelopes", required=True,
@@ -145,8 +142,6 @@ def main(argv: list[str] | None = None) -> int:
                      "and the merge coalesces cells against the committed "
                      "row (wal2json — its column array is naturally sparse "
                      "without REPLICA IDENTITY FULL; automatic for mongo)")
-    ing.add_argument("--mode", choices=("cow", "mor", "auto"), default="auto",
-                     help="auto = the mode recorded in the table's manifest")
 
     st = sub.add_parser("state")
     st.add_argument("--table", required=True)
@@ -233,8 +228,6 @@ def main(argv: list[str] | None = None) -> int:
         master=args.master, shuffle_partitions=args.shuffle_partitions
     )
 
-    mode = getattr(args, "mode", "auto")
-    mode = None if mode == "auto" else mode  # None → adopt manifest mode
     if args.cmd in ("stream", "ingest"):
         from .sources.envelopes import (
             PARTIAL_DIALECTS,
@@ -271,6 +264,14 @@ def main(argv: list[str] | None = None) -> int:
                 )
         except ValueError as e:
             ap.error(str(e))
+    if args.cmd in ("create", "stream", "apply", "ingest", "state", "changes",
+                    "maintain"):
+        # the layout comes from the table's manifest; only create chooses it
+        tgt = ParquetLakeTarget(spark, args.table)
+        if args.cmd == "create" and tgt.exists():
+            ap.error(f"a table already exists at {args.table}")
+        if args.cmd != "create" and not tgt.exists():
+            ap.error(f"no table at {args.table}; run create first")
     if args.cmd == "gen-wal":
         df = gen_change_events(
             spark,
@@ -302,12 +303,11 @@ def main(argv: list[str] | None = None) -> int:
         }))
     elif args.cmd == "create":
         tgt = ParquetLakeTarget(
-            spark, args.table, n_buckets=args.n_buckets, mode=mode or "cow"
+            spark, args.table, n_buckets=args.n_buckets, mode=args.mode
         )
         tgt.create()
         print(json.dumps({"created": args.table, "mode": tgt.mode}))
     elif args.cmd == "stream":
-        tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         cfg = CDCConfig(metrics_path=args.metrics, partial_set_col=mask)
         t0 = time.time()
         run_stream(
@@ -323,24 +323,20 @@ def main(argv: list[str] | None = None) -> int:
             "snapshot": tgt.manifest()["version"],
         }))
     elif args.cmd == "apply":
-        tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         events = spark.read.parquet(args.events)
         res = apply_batch(tgt, events, args.batch_id)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "ingest":
-        tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         events = parse(spark.read.text(args.envelopes))
         cfg = CDCConfig(dead_letter_dir=args.dead_letter, partial_set_col=mask)
         res = apply_batch(tgt, events, args.batch_id, cfg)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "state":
-        tgt = ParquetLakeTarget(spark, args.table, mode=None)
         df = tgt.read().orderBy("conv_id", "turn_idx")
         for r in df.limit(args.limit).collect():
             print(json.dumps(r.asDict(), default=str))
         print(json.dumps({"rows": df.count()}))
     elif args.cmd == "changes":
-        tgt = ParquetLakeTarget(spark, args.table, mode=None)
         if args.emit_dialect:
             if not args.out:
                 ap.error("--emit-dialect requires --out")
@@ -369,7 +365,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(json.dumps(r.asDict(), default=str))
             print(json.dumps({"changed_keys": df.count()}))
     elif args.cmd == "maintain":
-        tgt = ParquetLakeTarget(spark, args.table, mode=None)
         out = {}
         if args.compact:
             out["buckets_compacted"] = tgt.compact()

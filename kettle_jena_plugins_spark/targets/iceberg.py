@@ -23,7 +23,6 @@ inserts of already-deleted keys.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -219,10 +218,12 @@ class IcebergTarget:
         self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {ns}")
         self.spark.sql(create_table_sql(self.table, schema, self.n_buckets))
 
+    def _properties(self) -> dict[str, str]:
+        rows = self.spark.sql(f"SHOW TBLPROPERTIES {self.table}").collect()
+        return {r["key"]: r["value"] for r in rows}
+
     def last_committed_batch(self) -> int:
-        row = self.spark.sql(f"SHOW TBLPROPERTIES {self.table} ('cdc.batch-id')")
-        props = {r["key"]: r["value"] for r in row.collect()}
-        return int(props.get("cdc.batch-id", -1))
+        return int(self._properties().get("cdc.batch-id", -1))
 
     def schema(self) -> T.StructType:
         df = self.spark.table(self.table)
@@ -254,8 +255,10 @@ class IcebergTarget:
         per key → MERGE INTO keyed on (conv_id, turn_idx), LWW-guarded on
         (ts, lsn) so late replays are no-ops.
 
-        Commit sequence (plan-level-pinned): idempotence gate (stream lineage
-        + batch-id) → MERGE → watermark + batch-id properties commit.
+        Commit sequence (plan-level-pinned): one table-properties read, the
+        idempotence gate on it (stream lineage + batch-id) → MERGE →
+        watermark + batch-id properties commit. Each touched bucket's
+        watermark becomes max(committed, batch max), as on the lake.
 
         ``partial_set_col``: the events are sparse row images carrying this
         set-columns mask; they reduce through
@@ -268,10 +271,9 @@ class IcebergTarget:
                 "loses the LWW anchor and the tombstone that shadows "
                 "pre-delete cells"
             )
-        row = self.spark.sql(f"SHOW TBLPROPERTIES {self.table} ('cdc.stream-id')")
-        props = {r["key"]: r["value"] for r in row.collect()}
-        same_lineage = props.get("cdc.stream-id") == stream_id
-        if same_lineage and batch_id <= self.last_committed_batch():
+        committed = self._properties()  # one read gates and carries watermarks
+        same_lineage = committed.get("cdc.stream-id") == stream_id
+        if same_lineage and batch_id <= int(committed.get("cdc.batch-id", -1)):
             return MergeResult(batch_id=batch_id, applied=False)
 
         if partial_set_col is not None:
@@ -303,11 +305,14 @@ class IcebergTarget:
         wm = reduced.groupBy(
             F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).alias("b")
         ).agg(F.max("lsn").alias("l")).collect()
-        props = {f"cdc.watermark.lsn.{r['b']}": str(r["l"]) for r in wm}
+        # a watermark never decreases: a batch of late events keeps it
+        props = {}
+        for r in wm:
+            key = f"cdc.watermark.lsn.{r['b']}"
+            props[key] = str(max(r["l"], int(committed.get(key, -1))))
         props["cdc.batch-id"] = str(batch_id)
         props["cdc.stream-id"] = stream_id
         self.spark.sql(set_tblproperties_sql(self.table, props))
         return MergeResult(
-            batch_id=batch_id, applied=True,
-            extra={"watermarks": json.loads(json.dumps(props))},
+            batch_id=batch_id, applied=True, extra={"watermarks": props}
         )

@@ -17,11 +17,15 @@ becomes hash-bucket layout on conv_id.
 
 Layout (table root):
     data/v{uuid}/_bucket={k}/part-*.parquet       file groups (base or delta)
-    _snapshots/v{N}.json                          manifest: per-bucket LAYER
-                                                  list (ordered file groups +
-                                                  schema id), batch id, lsn
-                                                  watermarks, batch metrics
+    _snapshots/v{N}.json                          manifest: layout, per-
+                                                  bucket LAYER list (ordered
+                                                  file groups + schema id),
+                                                  batch id, watermarks, metrics
     _snapshots/CURRENT                            atomic pointer (os.replace)
+
+The layout (n_buckets, mode, compact_threshold) is chosen once, at create,
+and every commit carries it forward. Opening an existing table reads it
+from the manifest: rows hashed under another bucket count would be lost.
 
 Write modes — one merge path; the mode only sets the compaction threshold.
 Every merge appends a batch-local LWW-reduced DELTA layer to the affected
@@ -64,6 +68,7 @@ from ..model import LWW_ORDER, MERGE_KEYS, TRANSCRIPTS_SCHEMA
 from ..operators.lww import lww_reduce, lww_reduce_partial
 
 INTERNAL_COLS = ("_lsn", "_deleted")
+LAYOUT_DEFAULTS = {"n_buckets": 16, "mode": "cow", "compact_threshold": 8}
 
 
 @dataclass
@@ -97,24 +102,34 @@ class ParquetLakeTarget:
         self,
         spark: SparkSession,
         root: str,
-        n_buckets: int = 16,
-        mode: str | None = "cow",
-        compact_threshold: int = 8,
+        n_buckets: int | None = None,
+        mode: str | None = None,
+        compact_threshold: int | None = None,
     ):
-        """mode=None → adopt the mode recorded in the table's manifest at
-        create time (falls back to "cow" for a not-yet-created table) —
-        re-opening an existing table should never silently flip its write
-        mode because the caller forgot to repeat the flag.
+        """The layout (n_buckets, mode, compact_threshold) is chosen once, at
+        create, and recorded in the manifest. An existing table takes it
+        from there: None adopts it, and a value that contradicts it raises
+        ValueError. A table not created yet — or one whose manifest predates
+        the record — uses the given value or the default (16, "cow", 8).
         compact_threshold applies to mor only; cow compacts every commit."""
-        assert mode in ("cow", "mor", None)
         self.spark = spark
         self.root = root.rstrip("/")
-        self.n_buckets = n_buckets
-        self.compact_threshold = compact_threshold
         self._snap_dir = os.path.join(self.root, "_snapshots")
-        if mode is None:
-            mode = self.manifest().get("mode", "cow") if self.exists() else "cow"
-        self.mode = mode
+        recorded = self.manifest() if self.exists() else {}
+        given = {"n_buckets": n_buckets, "mode": mode,
+                 "compact_threshold": compact_threshold}
+        for key, value in given.items():
+            have = recorded.get(key)
+            if have is None:
+                have = LAYOUT_DEFAULTS[key] if value is None else value
+            elif value is not None and value != have:
+                raise ValueError(
+                    f"table at {self.root} was created with {key}={have!r}, "
+                    f"not {value!r}"
+                )
+            setattr(self, key, have)
+        if self.mode not in ("cow", "mor"):
+            raise ValueError(f"mode must be cow or mor, not {self.mode!r}")
 
     # ---------------------------------------------------------------- meta
 
@@ -181,36 +196,24 @@ class ParquetLakeTarget:
 
     # ---------------------------------------------------------------- init
 
-    def create(
-        self,
-        initial: DataFrame | None = None,
-        schema: T.StructType | None = None,
-    ) -> None:
-        """Create the table (optionally seeded with an initial transcripts
-        DataFrame; its rows get _lsn=-1 so any real event wins LWW)."""
+    def create(self, schema: T.StructType | None = None) -> None:
+        """Create the empty table, recording its layout in the manifest;
+        every later commit carries it forward."""
         if self.exists():
             raise ValueError(f"target already exists at {self.root}")
         logical = T.StructType((schema or TRANSCRIPTS_SCHEMA).fields)
-        manifest = {
+        self._commit({
             "version": 0,
             "mode": self.mode,
+            "n_buckets": self.n_buckets,
+            "compact_threshold": self.compact_threshold,
             "batch_id": -1,
             "current_schema_id": 0,
             "schemas": {"0": logical.jsonValue()},
             "buckets": {},
             "watermarks": {},
             "metrics": {},
-        }
-        if initial is not None:
-            data = initial.withColumn(
-                "_lsn", F.lit(-1).cast("long")
-            ).withColumn("_deleted", F.lit(False))
-            files_by_bucket = self._write_file_group(data)
-            manifest["buckets"] = {
-                b: {"layers": [{"files": fs, "schema_id": 0}]}
-                for b, fs in files_by_bucket.items()
-            }
-        self._commit(manifest)
+        })
 
     # ---------------------------------------------------------------- read
 
@@ -418,11 +421,15 @@ class ParquetLakeTarget:
         (the CURRENT snapshot is always kept) and delete data files no kept
         manifest references (compaction/COW leave unreferenced file groups
         behind by design — commits never delete, so readers of older
-        snapshots are never broken until expiry). Returns removal counts."""
+        snapshots are never broken until expiry). Only files older than
+        the current snapshot's manifest are deleted: an orphan is always
+        older than the commit that orphaned it, while a merge's file group
+        written after it is not yet committed. Returns removal counts."""
         versions = self.snapshots()
         with open(self._current_path()) as f:
             current = int(f.read().strip())
         keep = set(versions[-keep_last:]) | {current}
+        cutoff = os.path.getmtime(os.path.join(self._snap_dir, f"v{current}.json"))
         # liveness by REALPATH: manifests store paths as spelled at write
         # time; a different root spelling (relative vs absolute, moved
         # table) must not make live files look unreferenced
@@ -451,6 +458,8 @@ class ParquetLakeTarget:
         for dirpath, _dirnames, filenames in os.walk(data_dir, topdown=False):
             for fname in filenames:
                 p = os.path.join(dirpath, fname)
+                if os.path.getmtime(p) >= cutoff:
+                    continue  # written after the current commit
                 if fname.endswith(".parquet") and os.path.realpath(p) not in referenced:
                     os.remove(p)
                     removed_files += 1

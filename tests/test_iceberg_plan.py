@@ -5,6 +5,8 @@ integration test that activates if an Iceberg catalog is ever configured."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import types as T
 
@@ -237,6 +239,25 @@ def test_idempotence_gate_skips_merge(spark, monkeypatch):
     res2 = tgt.merge_batch(_events(spark), batch_id=5, stream_id="s1")
     monkeypatch.undo()
     assert res2.applied
+
+
+def test_one_properties_read_and_watermarks_never_decrease(spark, monkeypatch):
+    """The gate reads the table properties once, and a batch of late events
+    (lsn 10 under committed watermarks of 100) leaves every watermark at
+    100: each touched bucket takes max(committed, batch max)."""
+    tgt = IcebergTarget(spark, table=TBL, n_buckets=4)
+    rec = _Recorder(spark, {
+        "cdc.stream-id": "s1", "cdc.batch-id": "3",
+        **{f"cdc.watermark.lsn.{b}": "100" for b in range(4)},
+    })
+    monkeypatch.setattr(tgt.spark, "sql", rec, raising=False)
+    res = tgt.merge_batch(_events(spark), batch_id=4, stream_id="s1")
+    monkeypatch.undo()
+    assert res.applied
+    assert sum(s.startswith("SHOW TBLPROPERTIES") for s in rec.stmts) == 1
+    assert rec.stmts[-1].startswith("ALTER TABLE")
+    written = re.findall(r"'cdc\.watermark\.lsn\.\d+'='(-?\d+)'", rec.stmts[-1])
+    assert written and min(int(v) for v in written) == 100
 
 
 def test_iceberg_integration_if_available(spark, tmp_path):

@@ -371,6 +371,66 @@ def test_watermarks_are_max_written_lsn_per_bucket(spark, tmp_path):
     t.drop()
 
 
+def test_reopened_table_keeps_its_layout(spark, tmp_path):
+    """A table opened without layout arguments takes its bucket count, mode
+    and threshold from the manifest, so whole-row merges, partial-image
+    merges (on keys committed before the reopen) and compact() keep it
+    equal to LWW over every event. A contradicting argument is refused."""
+    from pyspark.sql import types as T
+
+    from kettle_jena_plugins_spark.operators.lww import lww_state_partial
+
+    root = str(tmp_path / "tbl")
+    created = ParquetLakeTarget(
+        spark, root, n_buckets=4, mode="mor", compact_threshold=3
+    )
+    created.create()
+    whole = CDCConfig(normalize=False)
+    cells = ["role", "text", "tool"]
+    b0 = [ev("I", c * 10 + t, c * 10 + t, f"c{c}", t, text=f"v0-{c}-{t}")
+          for c in range(40) for t in range(5)]
+    apply_batch(created, make_events(spark, b0), 0, whole)
+
+    reopened = ParquetLakeTarget(spark, root)
+    assert (reopened.n_buckets, reopened.mode, reopened.compact_threshold) == (
+        4, "mor", 3
+    )
+    b1 = [ev("U", 1000 + c, 1000 + c, f"c{c}", 0, text=f"v1-{c}")
+          for c in range(0, 40, 2)]
+    b1 += [ev("D", 1100 + c, 1100 + c, f"c{c}", 1) for c in range(0, 40, 3)]
+    b1 += [ev("I", 1200 + c, 1200 + c, f"n{c}", 0, text="new") for c in range(30)]
+    apply_batch(reopened, make_events(spark, b1), 1, whole)
+    want = {
+        (r["conv_id"], r["turn_idx"]): (r["role"], r["text"], r["tool"])
+        for r in lww_state(make_events(spark, b0 + b1)).collect()
+    }
+    assert state(reopened) == want
+
+    partial_schema = T.StructType(
+        [*CHANGE_EVENT_SCHEMA.fields,
+         T.StructField("set_cols", T.ArrayType(T.StringType()))]
+    )
+    b2 = [(*ev("U", 2000 + c, 2000 + c, f"c{c}", 2, role=None, tool="t"),
+           ["tool"]) for c in range(40)]
+    b2 += [(*ev("U", 2100 + c, 2100 + c, f"c{c}", 1, text="revived"),
+            ["text"]) for c in range(0, 40, 3)]
+    apply_batch(reopened, make_events(spark, b2, partial_schema), 2,
+                CDCConfig(normalize=False, partial_set_col="set_cols"))
+    assert reopened.compact() > 0
+    everything = make_events(
+        spark, [(*e, cells) for e in b0 + b1] + b2, partial_schema
+    )
+    want = {
+        (r["conv_id"], r["turn_idx"]): (r["role"], r["text"], r["tool"])
+        for r in lww_state_partial(everything).collect()
+    }
+    assert state(reopened) == want
+    assert reopened.manifest()["n_buckets"] == 4
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        ParquetLakeTarget(spark, root, n_buckets=16)
+    reopened.drop()
+
+
 def test_metrics_jsonl_records_manifest_counts(spark, tmp_path):
     """The apply metrics jsonl and the snapshot manifest record the same
     batch counts, buckets_compacted included."""

@@ -4,6 +4,8 @@ analogues over the versioned-manifest layout."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -138,9 +140,68 @@ def test_expire_snapshots_path_spelling_safe(spark, tmp_path):
 
 
 def test_mode_adopted_from_manifest(spark, tmp_path):
-    t1 = ParquetLakeTarget(spark, str(tmp_path / "m"), n_buckets=2, mode="mor")
+    t1 = ParquetLakeTarget(
+        spark, str(tmp_path / "m"), n_buckets=2, mode="mor", compact_threshold=5
+    )
     t1.create()
     reopened = ParquetLakeTarget(spark, str(tmp_path / "m"), mode=None)
     assert reopened.mode == "mor"
+    assert (reopened.n_buckets, reopened.compact_threshold) == (2, 5)
     fresh = ParquetLakeTarget(spark, str(tmp_path / "nope"), mode=None)
     assert fresh.mode == "cow"
+    assert (fresh.n_buckets, fresh.compact_threshold) == (16, 8)
+    # a manifest that predates the layout record: the given value or the
+    # default, as before the record existed
+    m = t1.manifest()
+    del m["n_buckets"], m["compact_threshold"]
+    m["version"] += 1
+    t1._commit(m)
+    legacy = ParquetLakeTarget(spark, str(tmp_path / "m"), n_buckets=3)
+    assert (legacy.mode, legacy.n_buckets, legacy.compact_threshold) == (
+        "mor", 3, 8
+    )
+
+
+def test_expiry_keeps_an_uncommitted_file_group(spark, tmp_path):
+    """A merge's file group written after the current commit is not yet
+    referenced by any manifest; expiry must not delete it."""
+    tgt, _versions = make(spark, tmp_path, mode="cow")
+    group = tgt._write_file_group(
+        ev(spark, [("c7", 0, "user", "pending", None,
+                    "2026-01-01 00:04:00", "I", 8)])
+        .withColumn("_lsn", F.col("lsn")).withColumn("_deleted", F.lit(False))
+        .drop("op", "lsn")
+    )
+    files = [f for fs in group.values() for f in fs]
+    assert files
+    res = tgt.expire_snapshots(keep_last=1)
+    assert res["removed_files"] > 0  # cow's compacted-away groups still go
+    assert all(os.path.exists(f) for f in files)
+
+
+def test_cli_needs_a_table_and_create_needs_none(spark, tmp_path, capsys):
+    """Commands on a path with no table, and create on an existing one,
+    are usage errors (exit 2), not tracebacks."""
+    from kettle_jena_plugins_spark.run import main
+
+    tbl = str(tmp_path / "none")
+    for argv in (
+        ["apply", "--events", str(tmp_path), "--batch-id", "0"],
+        ["ingest", "--envelopes", str(tmp_path), "--dialect", "debezium",
+         "--batch-id", "0"],
+        ["stream", "--wal", str(tmp_path), "--checkpoint", str(tmp_path / "ck")],
+        ["state"],
+        ["changes", "--from-version", "0", "--to-version", "1"],
+        ["maintain", "--compact"],
+    ):
+        with pytest.raises(SystemExit) as e:
+            main([*argv, "--table", tbl])
+        assert e.value.code == 2, argv
+        assert "run create first" in capsys.readouterr().err
+    assert not os.path.exists(tbl) and not (tmp_path / "ck").exists()
+    assert main(["create", "--table", tbl, "--n-buckets", "4"]) == 0
+    with pytest.raises(SystemExit) as e:
+        main(["create", "--table", tbl])
+    assert e.value.code == 2
+    assert "already exists" in capsys.readouterr().err
+    assert ParquetLakeTarget(spark, tbl).n_buckets == 4
