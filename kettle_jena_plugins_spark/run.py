@@ -224,6 +224,8 @@ def main(argv: list[str] | None = None) -> int:
         ap.error(f"index {args.action} requires --docs")
     if args.cmd == "pipeline" and args.stream and not args.checkpoint:
         ap.error("pipeline --stream requires --checkpoint")
+    if args.cmd == "maintain" and args.keep_last < 0:
+        ap.error(f"--keep-last must be >= 0, not {args.keep_last}")
     spark = get_spark(
         master=args.master, shuffle_partitions=args.shuffle_partitions
     )

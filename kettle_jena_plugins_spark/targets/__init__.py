@@ -1,1 +1,1 @@
-from .parquet_lake import MergeResult, ParquetLakeTarget  # noqa: F401
+from .parquet_lake import CommitConflict, MergeResult, ParquetLakeTarget  # noqa: F401

@@ -13,12 +13,12 @@ DDL/MERGE text and the commit sequence (tests/test_iceberg_plan.py).
 Idempotence: batch-id + per-bucket LSN high-watermarks are stored in the
 table's snapshot summary via `ALTER TABLE ... SET TBLPROPERTIES` in the same
 driver-side commit sequence (`cdc.batch-id`, `cdc.watermark.lsn.<bucket>`,
-FIXTURES.md §1).
+FIXTURES.md §1). The table records its bucket count (`cdc.n-buckets`) at
+create, and watermarks are keyed by that record.
 
-Deletes default to soft (`_deleted` flag — consistent with the lake target's
-merge-on-read tombstones); `hard_delete=True` emits a
-`WHEN MATCHED AND s.op = 'D' THEN DELETE` branch instead and suppresses
-inserts of already-deleted keys.
+Deletes are soft (`_deleted` tombstones, as on the lake target): a deleted
+key keeps the (ts, _lsn) anchor of the LWW guard, so an older redelivered
+update cannot re-insert it.
 """
 
 from __future__ import annotations
@@ -58,7 +58,8 @@ def create_table_sql(
         f"_deleted boolean) USING iceberg "
         f"PARTITIONED BY (bucket({n_buckets}, conv_id)) "
         f"TBLPROPERTIES ('write.distribution-mode'='hash', "
-        f"'write.merge.mode'='merge-on-read', 'cdc.batch-id'='-1')"
+        f"'write.merge.mode'='merge-on-read', 'cdc.batch-id'='-1', "
+        f"'cdc.n-buckets'='{n_buckets}')"
     )
 
 
@@ -80,21 +81,10 @@ def merge_into_sql(
     payload: Sequence[str],
     merge_keys: Sequence[str] = MERGE_KEYS,
     source_view: str = "_cdc_batch",
-    hard_delete: bool = False,
 ) -> str:
     """Key-partitioned MERGE INTO with the LWW guard
     `struct(s.ts, s.lsn) > struct(t.ts, t._lsn)` — equal-or-older replayed
-    rows are no-ops, preserving convergence under duplicate delivery.
-
-    CONVERGENCE CAVEAT — hard_delete=True weakens this guarantee: once a D
-    physically deletes a key, the (ts, _lsn) pair that anchored the LWW
-    guard is gone, so a redelivered/out-of-order OLDER update for that key
-    hits WHEN NOT MATCHED and re-inserts stale data. The batch-id
-    idempotence gate covers whole-batch replays (same lineage), but NOT
-    cross-lineage redelivery or intra-stream reordering. Use hard_delete
-    only with exactly-once ordered delivery upstream (or pre-dedup against
-    the WAL); soft-delete tombstones (the default) keep (ts, _lsn) and
-    converge under any delivery order."""
+    rows are no-ops, preserving convergence under duplicate delivery."""
     on = " AND ".join(f"t.{k} = s.{k}" for k in merge_keys)
     set_cols = ", ".join(
         [f"t.{c} = s.{c}" for c in payload]
@@ -107,14 +97,6 @@ def merge_into_sql(
         + ["s.ts", "s.lsn", "(s.op = 'D')"]
     )
     lww = "struct(s.ts, s.lsn) > struct(t.ts, t._lsn)"
-    if hard_delete:
-        return (
-            f"MERGE INTO {table} t USING {source_view} s ON {on} "
-            f"WHEN MATCHED AND s.op = 'D' AND {lww} THEN DELETE "
-            f"WHEN MATCHED AND {lww} THEN UPDATE SET {set_cols} "
-            f"WHEN NOT MATCHED AND s.op <> 'D' "
-            f"THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-        )
     return (
         f"MERGE INTO {table} t USING {source_view} s ON {on} "
         f"WHEN MATCHED AND {lww} THEN UPDATE SET {set_cols} "
@@ -146,10 +128,6 @@ def merge_into_partial_sql(
     - the LWW guard stays ROW-granular (struct(s.ts, s.lsn) >
       struct(t.ts, t._lsn)) — the documented cross-batch contract: a
       late cell write older than the committed row version is a no-op.
-
-    Partial merges require soft deletes: a hard-deleted key loses both
-    its LWW anchor and the tombstone that shadows pre-delete cells, so
-    there is deliberately no hard_delete variant of this builder.
     """
     on = " AND ".join(f"t.{k} = s.{k}" for k in merge_keys)
     cell_sets = [
@@ -200,17 +178,12 @@ class IcebergTarget:
         spark: SparkSession,
         table: str = "lake.cdc.transcripts",
         n_buckets: int = 16,
-        hard_delete: bool = False,
     ):
-        """hard_delete=True physically deletes on D instead of writing a
-        tombstone — see merge_into_sql's convergence caveat: it requires
-        exactly-once ordered delivery upstream, because a hard-deleted key
-        loses its LWW anchor and an older redelivered update would
-        re-insert stale data."""
+        """n_buckets is the bucket count create() gives the table; merges
+        key watermarks by the table's own `cdc.n-buckets` record."""
         self.spark = spark
         self.table = table
         self.n_buckets = n_buckets
-        self.hard_delete = hard_delete
 
     def create(self, schema: T.StructType | None = None) -> None:
         schema = schema or TRANSCRIPTS_SCHEMA
@@ -264,13 +237,7 @@ class IcebergTarget:
         set-columns mask; they reduce through
         lww_reduce_partial(emit_set_col=...) — one row per key with the
         batch mask — and the MERGE overwrites only masked cells
-        (merge_into_partial_sql). Requires soft deletes."""
-        if partial_set_col is not None and self.hard_delete:
-            raise ValueError(
-                "partial merges require soft deletes: a hard-deleted key "
-                "loses the LWW anchor and the tombstone that shadows "
-                "pre-delete cells"
-            )
+        (merge_into_partial_sql)."""
         committed = self._properties()  # one read gates and carries watermarks
         same_lineage = committed.get("cdc.stream-id") == stream_id
         if same_lineage and batch_id <= int(committed.get("cdc.batch-id", -1)):
@@ -294,16 +261,17 @@ class IcebergTarget:
                     self.table, payload, MERGE_KEYS, set_col=partial_set_col
                 )
             else:
-                sql = merge_into_sql(
-                    self.table, payload, MERGE_KEYS, hard_delete=self.hard_delete
-                )
+                sql = merge_into_sql(self.table, payload, MERGE_KEYS)
             self.spark.sql(sql)
         finally:
             # per-batch temp-view cleanup (the reference's model.close()
             # resource lifecycle, JenaSerializerStepData.java:60-63)
             self.spark.catalog.dropTempView("_cdc_batch")
+        # the bucket count the table was created with; a table created
+        # before the record falls back to the constructor's
+        n_buckets = int(committed.get("cdc.n-buckets", self.n_buckets))
         wm = reduced.groupBy(
-            F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).alias("b")
+            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).alias("b")
         ).agg(F.max("lsn").alias("l")).collect()
         # a watermark never decreases: a batch of late events keeps it
         props = {}

@@ -1,5 +1,6 @@
 """ParquetLakeTarget — a minimal lake-table format with the commit semantics
-the north rule requires, built from scratch on parquet + atomic manifest swap.
+the north rule requires, built from scratch on parquet + exclusively created
+snapshot manifests.
 
 Why it exists: the sandbox ships no Iceberg runtime jar, so `MERGE INTO`
 cannot be issued as SQL here. This target implements the same contract —
@@ -21,7 +22,12 @@ Layout (table root):
                                                   bucket LAYER list (ordered
                                                   file groups + schema id),
                                                   batch id, watermarks, metrics
-    _snapshots/CURRENT                            atomic pointer (os.replace)
+
+A commit IS the exclusive creation of v{N}.json: the manifest is written
+to a dot-named temp file and hard-linked into place (os.link fails if
+v{N}.json exists), so of two writers building on v{N-1} one commits and the
+other gets CommitConflict. The current snapshot is the newest v{N}.json;
+there is no pointer file.
 
 The layout (n_buckets, mode, compact_threshold) is chosen once, at create,
 and every commit carries it forward. Opening an existing table reads it
@@ -54,6 +60,7 @@ amplification at high batch rates.
 from __future__ import annotations
 
 import functools
+import glob
 import json
 import os
 import shutil
@@ -69,6 +76,11 @@ from ..operators.lww import lww_reduce, lww_reduce_partial
 
 INTERNAL_COLS = ("_lsn", "_deleted")
 LAYOUT_DEFAULTS = {"n_buckets": 16, "mode": "cow", "compact_threshold": 8}
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed the snapshot version this commit was built
+    on top of; the table is left as that writer left it."""
 
 
 @dataclass
@@ -133,18 +145,17 @@ class ParquetLakeTarget:
 
     # ---------------------------------------------------------------- meta
 
-    def _current_path(self) -> str:
-        return os.path.join(self._snap_dir, "CURRENT")
-
     def exists(self) -> bool:
-        return os.path.exists(self._current_path())
+        return bool(self.snapshots())
 
     def manifest(self, version: int | None = None) -> dict:
-        """Current manifest, or a historical one (time travel) — every
-        commit keeps its v{N}.json until expire_snapshots removes it."""
+        """Current (newest) manifest, or a historical one (time travel) —
+        every commit keeps its v{N}.json until expire_snapshots removes it."""
         if version is None:
-            with open(self._current_path()) as f:
-                version = int(f.read().strip())
+            versions = self.snapshots()
+            if not versions:
+                raise ValueError(f"no table at {self.root}")
+            version = versions[-1]
         try:
             with open(os.path.join(self._snap_dir, f"v{version}.json")) as f:
                 return json.load(f)
@@ -183,15 +194,22 @@ class ParquetLakeTarget:
         return self._current_schema(self.manifest())
 
     def _commit(self, manifest: dict) -> int:
+        """Commit by creating v{N}.json exclusively: write it aside, then
+        hard-link it into place. A crash before the link commits nothing."""
         os.makedirs(self._snap_dir, exist_ok=True)
         version = manifest["version"]
-        path = os.path.join(self._snap_dir, f"v{version}.json")
-        with open(path, "w") as f:
-            json.dump(manifest, f, indent=1, default=str)
-        tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
+        tmp = os.path.join(self._snap_dir, f".v{version}.tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._current_path())  # atomic snapshot swap
+            json.dump(manifest, f, indent=1, default=str)
+        try:
+            os.link(tmp, os.path.join(self._snap_dir, f"v{version}.json"))
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot v{version} of {self.root} was committed by another "
+                "writer; this commit's files are orphans that expiry reclaims"
+            ) from None
+        finally:
+            os.remove(tmp)
         return version
 
     # ---------------------------------------------------------------- init
@@ -418,18 +436,19 @@ class ParquetLakeTarget:
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Maintenance: drop manifests older than the newest `keep_last`
-        (the CURRENT snapshot is always kept) and delete data files no kept
-        manifest references (compaction/COW leave unreferenced file groups
-        behind by design — commits never delete, so readers of older
-        snapshots are never broken until expiry). Only files older than
-        the current snapshot's manifest are deleted: an orphan is always
-        older than the commit that orphaned it, while a merge's file group
-        written after it is not yet committed. Returns removal counts."""
+        (the current, newest one is always kept, so 0 keeps only it) and
+        delete data files no kept manifest references (compaction/COW and
+        commits that lost a CommitConflict leave unreferenced file groups
+        behind — commits never delete, so readers of older snapshots are
+        never broken until expiry) and manifest temp files a crashed commit
+        left. Only files older than the current manifest are deleted: an
+        orphan is always older than the commit that orphaned it, while a
+        file written after it is not yet committed. Returns removal counts."""
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, not {keep_last}")
         versions = self.snapshots()
-        with open(self._current_path()) as f:
-            current = int(f.read().strip())
-        keep = set(versions[-keep_last:]) | {current}
-        cutoff = os.path.getmtime(os.path.join(self._snap_dir, f"v{current}.json"))
+        keep = set(versions[-max(keep_last, 1):])
+        cutoff = os.path.getmtime(os.path.join(self._snap_dir, f"v{versions[-1]}.json"))
         # liveness by REALPATH: manifests store paths as spelled at write
         # time; a different root spelling (relative vs absolute, moved
         # table) must not make live files look unreferenced
@@ -472,6 +491,9 @@ class ParquetLakeTarget:
             if v not in keep:
                 os.remove(os.path.join(self._snap_dir, f"v{v}.json"))
                 removed_manifests += 1
+        for tmp in glob.glob(os.path.join(self._snap_dir, ".v*.tmp-*")):
+            if os.path.getmtime(tmp) < cutoff:
+                os.remove(tmp)
         return {
             "kept": sorted(keep),
             "removed_manifests": removed_manifests,

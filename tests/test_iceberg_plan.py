@@ -42,7 +42,8 @@ def test_create_table_golden():
         "_lsn bigint, _deleted boolean) USING iceberg "
         "PARTITIONED BY (bucket(16, conv_id)) "
         "TBLPROPERTIES ('write.distribution-mode'='hash', "
-        "'write.merge.mode'='merge-on-read', 'cdc.batch-id'='-1')"
+        "'write.merge.mode'='merge-on-read', 'cdc.batch-id'='-1', "
+        "'cdc.n-buckets'='16')"
     )
 
 
@@ -60,21 +61,10 @@ def test_merge_sql_soft_delete_golden():
     )
 
 
-def test_merge_sql_hard_delete_golden():
-    sql = merge_into_sql(TBL, ["role"], hard_delete=True)
-    assert (
-        "WHEN MATCHED AND s.op = 'D' AND "
-        "struct(s.ts, s.lsn) > struct(t.ts, t._lsn) THEN DELETE" in sql
-    )
-    assert "WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT" in sql
-    # the delete branch must precede the update branch (first match wins)
-    assert sql.index("THEN DELETE") < sql.index("THEN UPDATE")
-
-
 def test_merge_sql_partial_golden():
     """Cell-level partial MERGE: masked cells overwrite, unmasked keep the
     target value unless the target is a tombstone (revival keeps only the
-    batch's cells); row-granular LWW guard; no hard-delete form exists."""
+    batch's cells); row-granular LWW guard."""
     from kettle_jena_plugins_spark.targets.iceberg import (
         merge_into_partial_sql,
     )
@@ -96,13 +86,10 @@ def test_merge_sql_partial_golden():
     )
 
 
-def test_partial_merge_rejects_hard_delete_and_emits_partial_sql(
-    spark, monkeypatch
-):
+def test_partial_merge_emits_partial_sql(spark, monkeypatch):
     """merge_batch(partial_set_col=...) must route through the partial
-    builder (CASE-masked SET clauses in the recorded MERGE), exclude the
-    mask from the payload columns, and refuse hard_delete. The sink
-    reduces the raw events itself."""
+    builder (CASE-masked SET clauses in the recorded MERGE) and exclude the
+    mask from the payload columns. The sink reduces the raw events itself."""
     import datetime as dt
 
     rows = [
@@ -114,10 +101,6 @@ def test_partial_merge_rejects_hard_delete_and_emits_partial_sql(
         "role string, text string, tool string, set_cols array<string>"
     )
     events = spark.createDataFrame(rows, schema)
-
-    tgt = IcebergTarget(spark, table=TBL, n_buckets=4, hard_delete=True)
-    with pytest.raises(ValueError, match="soft deletes"):
-        tgt.merge_batch(events, 0, partial_set_col="set_cols")
 
     tgt = IcebergTarget(spark, table=TBL, n_buckets=4)
     rec = _Recorder(spark, {})
@@ -258,6 +241,32 @@ def test_one_properties_read_and_watermarks_never_decrease(spark, monkeypatch):
     assert rec.stmts[-1].startswith("ALTER TABLE")
     written = re.findall(r"'cdc\.watermark\.lsn\.\d+'='(-?\d+)'", rec.stmts[-1])
     assert written and min(int(v) for v in written) == 100
+
+
+def test_watermarks_keyed_by_the_tables_bucket_count(spark, monkeypatch):
+    """A target built with n_buckets=4 against a table whose properties
+    record 8 buckets keys its watermarks pmod(xxhash64(conv_id), 8)."""
+    from pyspark.sql import functions as F
+
+    events = spark.createDataFrame(
+        [(f"c{i}", 0, "user", "hi", None, "2026-01-01 00:00:00", "I", 10 + i)
+         for i in range(16)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string, op string, lsn long",
+    )
+
+    def buckets(n):
+        b = F.pmod(F.xxhash64("conv_id"), F.lit(n)).alias("b")
+        return {str(r["b"]) for r in events.select(b).distinct().collect()}
+
+    assert buckets(8) != buckets(4)  # the recorded count is observable
+    tgt = IcebergTarget(spark, table=TBL, n_buckets=4)
+    rec = _Recorder(spark, {"cdc.n-buckets": "8"})
+    monkeypatch.setattr(tgt.spark, "sql", rec, raising=False)
+    assert tgt.merge_batch(events, 0, stream_id="s1").applied
+    monkeypatch.undo()
+    written = re.findall(r"'cdc\.watermark\.lsn\.(\d+)'=", rec.stmts[-1])
+    assert set(written) == buckets(8)
 
 
 def test_iceberg_integration_if_available(spark, tmp_path):

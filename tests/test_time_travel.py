@@ -115,6 +115,41 @@ def test_expire_snapshots_keeps_current_readable(spark, tmp_path):
     assert state(tgt.read())[("c9", 0)] == "post-expire"
 
 
+def test_expire_keep_last_zero_keeps_only_current(spark, tmp_path):
+    """keep_last=0 keeps the current snapshot alone (not every manifest);
+    a negative count is refused, by the CLI before any work."""
+    from kettle_jena_plugins_spark.run import main
+
+    tgt, versions = make(spark, tmp_path)
+    before = state(tgt.read())
+    assert len(tgt.snapshots()) == 4
+    with pytest.raises(ValueError, match="keep_last"):
+        tgt.expire_snapshots(keep_last=-1)
+    with pytest.raises(SystemExit) as e:
+        main(["maintain", "--table", tgt.root, "--keep-last", "-1"])
+    assert e.value.code == 2
+    assert tgt.expire_snapshots(keep_last=0)["removed_manifests"] == 3
+    assert tgt.snapshots() == [versions[-1]]
+    assert state(tgt.read()) == before
+
+
+def test_snapshot_dir_holds_only_manifests_and_ignores_a_stale_pointer(
+    spark, tmp_path
+):
+    """The manifests are the only commit record: _snapshots/ holds nothing
+    else, and a pointer file left by an older format version naming an
+    older snapshot does not change which snapshot is current."""
+    tgt, versions = make(spark, tmp_path)
+    snap_dir = os.path.join(tgt.root, "_snapshots")
+    assert sorted(os.listdir(snap_dir)) == sorted(f"v{v}.json" for v in versions + [0])
+    before = state(tgt.read())
+    with open(os.path.join(snap_dir, "CURRENT"), "w") as f:
+        f.write(str(versions[0]))
+    reopened = ParquetLakeTarget(spark, tgt.root)
+    assert reopened.manifest()["version"] == versions[-1]
+    assert state(reopened.read()) == before
+
+
 def test_expire_snapshots_path_spelling_safe(spark, tmp_path):
     """A differently-spelled (but same) table root must not make live files
     look unreferenced; a genuinely moved table must refuse to delete."""
